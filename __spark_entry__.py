@@ -6,7 +6,9 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash -> CORRECTNESS_r{N}.json).
 
 Implementations live in airstrik_py_spark/ (SURVEY.md §2 slugs); this module
-only re-exports the merged registry.
+only re-exports the merged registry.  ``queries()`` order is registry-module
+order: the modules of ``registry._MODULES`` in turn (airstrik core first —
+kinematics, sessions, alarm, ...), each in its own ``QUERIES`` order.
 """
 
 from __future__ import annotations

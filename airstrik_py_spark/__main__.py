@@ -97,6 +97,17 @@ def cmd_run(args) -> None:
         .writeStream.foreachBatch(foreach_batch_idempotent_parquet(store)),
         trig,
     ).start()
+    # Wait on both: whichever query fails first ends `run` with its error
+    # and stops the survivor; --once returns once both have drained.
+    try:
+        while alarms.isActive or trips_q.isActive:
+            spark.streams.awaitAnyTermination()
+            spark.streams.resetTerminated()
+    finally:
+        alarms.stop()
+        trips_q.stop()
+    # a failure that landed between awaitAnyTermination and
+    # resetTerminated still surfaces here
     alarms.awaitTermination()
     trips_q.awaitTermination()
     print(f"trips written under {store}")

@@ -5,13 +5,12 @@ re-exports the merged dicts for the driver."""
 from __future__ import annotations
 
 import importlib
-import json
 from collections.abc import Callable
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Module enumeration order (stable tie-break within a rotation class).
+# Enumeration order of collect(): these modules in turn, each in its own
+# QUERIES order.
 _MODULES = (
     "kinematics_q",
     "sessions_q",
@@ -28,96 +27,6 @@ _MODULES = (
 )
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-# pin:begin (generated by tools/rotate.py — do not hand-edit)
-# Oldest-driver-evidence cohort (15 at r11), computed as of
-# CORRECTNESS_r14; regenerate with `python tools/rotate.py`
-# after each round's CORRECTNESS lands.
-_FORCE_WINDOW = (
-    "dedup_minhash_incremental",
-    "dedup_embedding_incremental",
-    "embedding_cosine_banded_candidates",
-    "embedding_norm_outliers",
-    "sample_stratified_exact",
-    "dedup_incremental",
-    "pipeline_corpus_release",
-    "star_pricing_summary",
-    "star_revenue_topk",
-    "star_region_revenue",
-    "star_large_orders",
-    "star_promo_share",
-    "star_returned_topk",
-    "star_priority_counts",
-    "star_forecast_delta",
-)
-# pin:end
-
-
-def _driver_green_history(
-    through_round: int | None = None,
-) -> tuple[dict[str, int], dict[str, int], dict[str, int], dict[str, int]]:
-    """(full-green counts, rows-only counts, last full-green round,
-    last rows-only round) per slug across CORRECTNESS_r*.json.
-
-    The driver records only the first ~50 ``queries()`` entries per round
-    (VERDICT r2: 50/113), so enumeration order decides which slugs ever earn
-    a driver-proven row.  Rotation policy (VERDICT r2 #1, refined per
-    VERDICT r6 #1): once every slug has at least one green, the binding
-    signal is RECENCY — a slug last verified in r2 and rewritten since is
-    staler than one verified once in r6 — so the least-recently-green
-    cohort leads, with fewest-greens and insertion order as tie-breaks.
-    The full local sweep (tools/check.py) still covers everything each
-    round.  Rows-only credit is returned separately: it only counts for
-    slugs that STILL have no oracle (a slug that later gained one —
-    ddl_drop_reset in r4 — must re-enter the window to earn its first
-    hash-verified row).
-
-    ``through_round`` limits the scan to CORRECTNESS files of that round
-    or earlier — tools/rotate.py stamps the pin with the round it
-    consumed, so the pin test can re-derive the cohort from the SAME
-    evidence even after the driver lands a newer CORRECTNESS file."""
-    counts: dict[str, int] = {}
-    rows_only: dict[str, int] = {}
-    last_full: dict[str, int] = {}
-    last_rows_only: dict[str, int] = {}
-    root = Path(__file__).resolve().parents[2]
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            rnd = int(path.stem.rsplit("_r", 1)[1])
-            rows = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        if through_round is not None and rnd > through_round:
-            continue
-        for slug, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            # Full green = every recorded check passed: rows AND schema AND
-            # value-hash (counting rows_match alone would rotate a slug whose
-            # CONTENT mismatches out of the window — the opposite of intent).
-            full_green = (
-                row.get("rows_match")
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-                and row.get("err") is None
-            )
-            # Rows-only slugs (no oracle possible, e.g. live catalog ops)
-            # record err='no_oracle' with a spark row count: that IS their
-            # maximum achievable verification — count it (for oracle-less
-            # slugs only; collect() decides), or they burn a window slot
-            # every round forever.
-            if full_green:
-                counts[slug] = counts.get(slug, 0) + 1
-                last_full[slug] = max(last_full.get(slug, 0), rnd)
-            elif (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            ):
-                rows_only[slug] = rows_only.get(slug, 0) + 1
-                last_rows_only[slug] = max(last_rows_only.get(slug, 0), rnd)
-    return counts, rows_only, last_full, last_rows_only
 
 
 def slug_roots() -> dict[str, frozenset[str]]:
@@ -142,21 +51,10 @@ def slug_roots() -> dict[str, frozenset[str]]:
     return {slug: frozenset(r) for slug, r in roots.items()}
 
 
-def changed_since_green() -> dict[str, bool]:
-    """slug -> True when the slug's source hash differs from the hash
-    recorded at its last driver-green row (srcstate sidecar).  A missing
-    sidecar entry counts as changed — never-certified-at-this-source leads
-    the window."""
-    from airstrik_py_spark.registry import srcstate
-
-    cur = srcstate.slug_hashes(slug_roots())
-    side = srcstate.load_sidecar()
-    return {
-        slug: side.get(slug, {}).get("hash") != h for slug, h in cur.items()
-    }
-
-
 def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
+    """(queries, oracles) merged across the registry modules: slugs in
+    _MODULES order, then each module's QUERIES order.  Oracles are put in
+    the same order; modules do not list ORACLES in QUERIES order."""
     queries: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}
     for mod_name in _MODULES:
@@ -170,38 +68,5 @@ def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
             raise ValueError(f"duplicate registry slugs from {mod_name}: {sorted(dupes)}")
         queries.update(mod_queries)
         oracles.update(getattr(mod, "ORACLES", {}))
-    # Stable rotation (VERDICT r6 #1 + r9 #1): hand-pinned cohort first,
-    # then slugs whose SOURCE CHANGED since their last driver-green row
-    # (hash sidecar, srcstate.py — a recently-green slug rewritten since is
-    # the stalest evidence of all), then least-recently-driver-green (never-
-    # green sorts as round 0 and therefore leads its class), then fewest
-    # green rows, then insertion order.  Rows-only rows count as green only
-    # while the slug still lacks an oracle; once one is registered the slug
-    # re-enters the window to earn its first hash-verified row.
-    full, rows_only, last_full, last_rows_only = _driver_green_history()
-    green = {
-        slug: full.get(slug, 0)
-        + (rows_only.get(slug, 0) if slug not in oracles else 0)
-        for slug in queries
-    }
-    last = {
-        slug: max(
-            last_full.get(slug, 0),
-            last_rows_only.get(slug, 0) if slug not in oracles else 0,
-        )
-        for slug in queries
-    }
-    changed = changed_since_green()
-    pin = {slug: i for i, slug in enumerate(_FORCE_WINDOW)}
-    order = sorted(
-        queries,
-        key=lambda slug: (
-            pin.get(slug, len(_FORCE_WINDOW)),
-            0 if changed.get(slug) else 1,
-            last.get(slug, 0),
-            green.get(slug, 0),
-        ),
-    )
-    queries = {slug: queries[slug] for slug in order}
-    oracles = {slug: oracles[slug] for slug in order if slug in oracles}
+    oracles = {slug: oracles[slug] for slug in queries if slug in oracles}
     return queries, oracles

@@ -1,19 +1,8 @@
-"""Per-slug source-state hashing for the rotation key (VERDICT r9 #1).
+"""Per-slug source-state hashing for scale-evidence freshness.
 
-The driver certifies ~50 slugs per round; a slug whose engine or oracle
-source changed AFTER its last driver-green row must re-enter the window
-even if it was verified recently (the r9 failure mode: the banded-cosine
-and PQ lanes were rewritten in r9 but carried r7/r8 green rows, and the
-least-recently-green key alone would never re-select them).
-
-The sidecar ``registry/green_hashes.json`` maps slug -> {"round": N,
-"hash": H} where H is the slug's source hash recorded when the slug last
-earned a driver-green CORRECTNESS row.  ``tools/record_green_hashes.py``
-maintains it at round close; its ``--seed`` mode reconstructs H from the
-round-close git tree ("round N: verdict/..." commits), so the initial
-file is evidence, not assertion.  ``collect()`` compares the sidecar hash
-to the current hash: a mismatch (or missing entry) marks the slug
-changed-since-green and sorts it to the front of the window.
+``tools/scale_ledger.py`` judges whether an sf1/sf10 evidence row still
+describes the current code: the row is fresh when the slug's source hash at
+the commit that produced it equals the slug's hash in the worktree.
 
 Hash basis per slug: the registry module that defines the query callable,
 the module(s) that register it and its oracle SQL (they can differ —
@@ -21,8 +10,8 @@ extras_q re-registers dedup_q/similarity_q callables and composes their
 oracle text), plus the transitive closure of first-party
 (``airstrik_py_spark.*``) imports of all of those — parsed TEXTUALLY so
 historical git trees never need importing.  Module-level granularity is
-deliberately conservative: an edit anywhere in a module re-marks every
-slug whose closure contains it, which costs one re-verification, never a
+deliberately conservative: an edit anywhere in a module marks every slug
+whose closure contains it stale, which costs one re-measurement, never a
 missed one.
 
 Each file hashes as its AST with docstrings normalized away (VERDICT r14
@@ -37,14 +26,12 @@ from __future__ import annotations
 
 import ast
 import hashlib
-import json
 import re
 import subprocess
 from pathlib import Path
 
 PKG = "airstrik_py_spark"
 REPO_ROOT = Path(__file__).resolve().parents[2]
-SIDECAR = Path(__file__).resolve().parent / "green_hashes.json"
 
 _FROM_RE = re.compile(rf"from\s+({PKG}(?:\.\w+)*)\s+import\s+(.+)")
 _IMPORT_RE = re.compile(rf"import\s+({PKG}(?:\.\w+)*)")
@@ -122,10 +109,9 @@ class GitReader:
         return self._cache[rel]
 
 
-# Rotation plumbing is NOT part of any slug's semantics: the registry
-# package __init__ (enumeration order, green-history key) and this module
-# would otherwise mark every slug changed whenever the rotation policy
-# itself is edited.
+# Registry plumbing is NOT part of any slug's semantics: the registry
+# package __init__ (enumeration order) and this module would otherwise
+# mark every slug stale whenever either is edited.
 _EXCLUDE = frozenset(
     {f"{PKG}/registry/__init__.py", f"{PKG}/registry/srcstate.py"}
 )
@@ -190,8 +176,7 @@ def closure_hash(roots, read=read_worktree) -> str:
 
 def slug_hashes(slug_roots: dict[str, frozenset[str]], read=read_worktree) -> dict[str, str]:
     """Current (or historical, via `read`) hash per slug; closures are
-    memoized per distinct root set — ~15 registry modules, so this is a
-    few dozen file reads total, cheap enough for every collect() call."""
+    memoized per distinct root set."""
     memo: dict[frozenset[str], str] = {}
     out: dict[str, str] = {}
     for slug, roots in slug_roots.items():
@@ -200,14 +185,3 @@ def slug_hashes(slug_roots: dict[str, frozenset[str]], read=read_worktree) -> di
         out[slug] = memo[roots]
     return out
 
-
-def load_sidecar() -> dict[str, dict]:
-    try:
-        data = json.loads(SIDECAR.read_text())
-    except (OSError, ValueError):
-        return {}
-    return data if isinstance(data, dict) else {}
-
-
-def save_sidecar(data: dict[str, dict]) -> None:
-    SIDECAR.write_text(json.dumps(data, indent=1, sort_keys=True) + "\n")

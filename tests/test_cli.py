@@ -1,4 +1,4 @@
-"""CLI migration surface: config.yaml loading + csvdump subcommand wiring."""
+"""CLI migration surface: config.yaml loading + run/csvdump subcommand wiring."""
 
 from __future__ import annotations
 
@@ -6,10 +6,12 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 from airstrik_py_spark.config import load_config
 
 BASE = 1700000000.0
+REPO = Path(__file__).resolve().parents[1]
 
 
 def test_load_reference_config(tmp_path):
@@ -85,7 +87,7 @@ def test_csvdump_subcommand(tmp_path):
     res = subprocess.run(
         [sys.executable, "-m", "airstrik_py_spark", "csvdump",
          "--landing-dir", str(tape), "--out", str(out), "--mode", "stats"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO, timeout=300,
     )
     assert res.returncode == 0, res.stderr[-2000:]
     files = [f for f in os.listdir(out) if f.endswith(".csv")]
@@ -108,3 +110,65 @@ def test_dump1090_dir_fallback(tmp_path):
     assert _landing(ns, cfg) == "/data/landing"
     ns2 = argparse.Namespace(landing_dir="/override")
     assert _landing(ns2, cfg) == "/override"
+
+
+def _alarm_tape(tape) -> None:
+    """Plane `aa` dives toward home across two snapshots 30 s apart (a
+    warning); plane `bb` lands 10 min later, far away, pushing the
+    watermark past `aa`'s session so its trip closes."""
+    os.makedirs(tape)
+    fixes = [
+        (BASE, "aa", 35.727 - 0.20),
+        (BASE + 30, "aa", 35.727 - 0.12),
+        (BASE + 600, "bb", 36.5),
+    ]
+    for i, (now, hex_, lat) in enumerate(fixes):
+        snap = {
+            "now": now,
+            "aircraft": [
+                {"hex": hex_, "flight": "DAL1", "lat": lat, "lon": -78.696,
+                 "alt_geom": 500.0, "seen": 0.1}
+            ],
+        }
+        (tape / f"s{i}.json").write_text(json.dumps(snap))
+
+
+def test_run_once_prints_warning_and_writes_trips(tmp_path):
+    tape = tmp_path / "tape"
+    _alarm_tape(tape)
+    out = tmp_path / "out"
+    res = subprocess.run(
+        [sys.executable, "-m", "airstrik_py_spark", "run",
+         "--landing-dir", str(tape), "--out", str(out), "--once"],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    warnings = [
+        line for line in res.stdout.splitlines()
+        if line.startswith("[airstrik-warning]")
+    ]
+    assert warnings, res.stdout
+    assert "'plane_hex': 'aa'" in warnings[-1]
+    store = out / "airstrikdb"
+    assert f"trips written under {store}" in res.stdout
+    import pyarrow.parquet as pq
+
+    trips = pq.read_table(str(store)).to_pylist()
+    assert [(t["flight_id"], t["n_obs"]) for t in trips] == [("aa", 2)]
+
+
+def test_live_run_exits_when_trip_query_fails(tmp_path):
+    """The trip store cannot be created under a regular file, so the trips
+    query fails on its first batch while the alarm query would live on:
+    `run` must end with that error instead of waiting on the alarms."""
+    tape = tmp_path / "tape"
+    _alarm_tape(tape)
+    not_a_dir = tmp_path / "out"
+    not_a_dir.write_text("")
+    res = subprocess.run(
+        [sys.executable, "-m", "airstrik_py_spark", "run",
+         "--landing-dir", str(tape), "--out", str(not_a_dir)],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
+    )
+    assert res.returncode != 0
+    assert "trips written under" not in res.stdout

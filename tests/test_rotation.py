@@ -1,51 +1,51 @@
-"""Rotation-order invariants for the driver-window registry ordering.
+"""Registry enumeration order and the per-slug source hashes.
 
-The driver records only the first ~50 queries() entries per round, so
-collect() must enumerate (1) the hand-pinned re-certification cohort, then
-(2) slugs whose source hash changed since their last driver-green row
-(VERDICT r9 #1 — a recently-green slug rewritten since is the stalest
-evidence of all), then (3) least-recently-driver-green with fewest-greens
-as the tie-break.  These tests run against the repo's real
-CORRECTNESS_r*.json history and green_hashes.json sidecar — no Spark
-session needed.
+collect() enumerates slugs in a fixed order (registry _MODULES, then each
+module's QUERIES order) and does no work beyond importing the registry
+modules.  The srcstate closure hashes back SCALE_LEDGER freshness
+(tools/scale_ledger.py).  No Spark session needed.
 """
 
 from __future__ import annotations
 
-from airstrik_py_spark.registry import (
-    _FORCE_WINDOW,
-    _driver_green_history,
-    changed_since_green,
-    collect,
-    slug_roots,
-)
+import importlib
+import subprocess
+import sys
+from pathlib import Path
+
+from airstrik_py_spark.registry import _MODULES, collect, slug_roots
 from airstrik_py_spark.registry import srcstate
 
-
-def test_collect_orders_pinned_then_changed_then_recency():
-    queries, oracles = collect()
-    full, rows_only, last_full, last_rows_only = _driver_green_history()
-    changed = changed_since_green()
-    pin = {slug: i for i, slug in enumerate(_FORCE_WINDOW)}
-    keys = []
-    for slug in queries:
-        last = max(
-            last_full.get(slug, 0),
-            last_rows_only.get(slug, 0) if slug not in oracles else 0,
-        )
-        green = full.get(slug, 0) + (
-            rows_only.get(slug, 0) if slug not in oracles else 0
-        )
-        keys.append(
-            (pin.get(slug, len(_FORCE_WINDOW)), 0 if changed.get(slug) else 1, last, green)
-        )
-    assert keys == sorted(keys), "collect() must be pinned, changed, then LRG first"
+REPO = Path(__file__).resolve().parents[1]
 
 
-def test_force_window_leads():
+def test_collect_follows_module_then_queries_order():
     queries, _ = collect()
-    head = list(queries)[: len(_FORCE_WINDOW)]
-    assert head == list(_FORCE_WINDOW)
+    expected = [
+        slug
+        for mod_name in _MODULES
+        for slug in importlib.import_module(
+            f"airstrik_py_spark.registry.{mod_name}"
+        ).QUERIES
+    ]
+    assert list(queries) == expected
+
+
+def test_entry_import_does_not_load_srcstate():
+    """Importing the driver contract costs only the registry module
+    imports: source hashing stays off the import path."""
+    probe = (
+        "import sys; import __spark_entry__; "
+        "print('airstrik_py_spark.registry.srcstate' in sys.modules)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert out.strip().splitlines()[-1] == "False"
 
 
 def test_every_slug_has_oracle_and_callable():
@@ -62,17 +62,6 @@ def test_oracle_order_follows_query_order():
     queries, oracles = collect()
     q_order = [s for s in queries if s in oracles]
     assert list(oracles) == q_order
-
-
-def test_sidecar_hashes_match_current_for_unchanged():
-    """A sidecar entry whose hash equals the current hash must be reported
-    unchanged, and vice versa — the changed flag is exactly hash
-    inequality (missing entry counts as changed)."""
-    side = srcstate.load_sidecar()
-    cur = srcstate.slug_hashes(slug_roots())
-    changed = changed_since_green()
-    for slug, h in cur.items():
-        assert changed[slug] == (side.get(slug, {}).get("hash") != h)
 
 
 def test_srcstate_closure_covers_operator_rewrites():
@@ -156,22 +145,3 @@ def test_comment_only_edit_leaves_every_slug_hash_unchanged():
 
     changed = srcstate.slug_hashes(roots, read=recoded)
     assert changed != before
-
-
-def test_pinned_cohort_is_computed_oldest():
-    """VERDICT r14 #5: the pin is generated, not hand-edited — the committed
-    _FORCE_WINDOW must equal tools/rotate.py's oldest-driver-evidence
-    cohort exactly (order included), re-derived from the CORRECTNESS
-    evidence the pin block says it consumed (the stamp keeps this test
-    green when the driver lands a NEWER correctness file at round close;
-    the round-start `python tools/rotate.py` refresh re-stamps)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    from tools.rotate import compute_cohort, stamped_round
-
-    through = stamped_round()
-    assert through is not None, "pin block lost its CORRECTNESS_rN stamp"
-    cohort, _last = compute_cohort(through_round=through)
-    assert tuple(cohort) == _FORCE_WINDOW

@@ -15,10 +15,10 @@ Usage:
   python tools/close_round.py --check
       Fast drift gates only (no Spark session): SCALE_LEDGER vs the
       committed artifacts, README census block vs registry.collect(),
-      PLANS.md row coverage vs registry slugs, and green_hashes sidecar
-      parse.  Exit 1 on any drift.  Run this before ANY commit that adds
-      `sf*_r*.json` or touches the registry (the pre-commit hook in
-      tools/hooks/ automates the ledger half).
+      and PLANS.md row coverage vs registry slugs.  Exit 1 on any
+      drift.  Run this before ANY commit that adds `sf*_r*.json` or
+      touches the registry (the pre-commit hook in tools/hooks/ automates
+      the ledger half).
 
   python tools/close_round.py --closing-block [sf_dir]
       Run the gates, then the FULL measurement pass — `pytest tests/`,
@@ -96,20 +96,9 @@ def gate_plans_coverage(plans_path: Path | None = None) -> tuple[bool, str]:
     )
 
 
-def gate_green_hashes() -> tuple[bool, str]:
-    try:
-        side = json.loads(
-            (ROOT / "airstrik_py_spark/registry/green_hashes.json").read_text()
-        )
-        return True, f"green_hashes sidecar parses ({len(side)} slugs)"
-    except Exception as exc:  # noqa: BLE001
-        return False, f"green_hashes sidecar unreadable: {exc}"
-
-
 def run_gates() -> bool:
     ok = True
-    for gate in (gate_scale_ledger, gate_census, gate_plans_coverage,
-                 gate_green_hashes):
+    for gate in (gate_scale_ledger, gate_census, gate_plans_coverage):
         good, msg = gate()
         print(("PASS  " if good else "FAIL  ") + msg)
         ok &= good
