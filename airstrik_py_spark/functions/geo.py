@@ -1,6 +1,6 @@
 """Geodesic math as pure Catalyst Column expressions.
 
-The reference uses geopy's WGS-84 geodesic (airstrik.py:245-258, 400, 438)
+The reference uses a WGS-84 ellipsoid geodesic (airstrik.py:245-258, 400, 438)
 and a hand-rolled great-circle bearing (airstrik.py:147-165).  We use the
 spherical haversine / forward-geodesic formulas — whole-stage-codegen'd
 JVM expressions, no Python in the hot path (SURVEY.md W2-W4, D1).  At the
@@ -48,7 +48,7 @@ def bearing_deg(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colum
 
 def dest_lat_deg(lat1: Column, brg_deg: Column, dist_km: Column) -> Column:
     """Latitude of the spherical forward-geodesic destination point
-    (reference: geopy destination at airstrik.py:245-258)."""
+    (reference: ellipsoid destination at airstrik.py:245-258)."""
     rlat1 = F.radians(lat1)
     ang = dist_km / F.lit(EARTH_RADIUS_KM)
     brg = F.radians(brg_deg)

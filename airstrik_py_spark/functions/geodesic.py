@@ -1,6 +1,7 @@
-"""WGS-84 geodesic inverse problem, pure Python — no geopy (VERDICT r10 #7).
+"""WGS-84 geodesic inverse problem, pure Python, no third-party geodesic
+package (VERDICT r10 #7).
 
-The reference computes distances with geopy's `geodesic` (airstrik.py:400,
+The reference computes distances with a `geodesic` call (airstrik.py:400,
 438), which is Karney's algorithm on the WGS-84 ellipsoid.  The engine's
 hot path stays the spherical haversine Column expression (functions/geo.py)
 — this module exists to QUANTIFY that divergence (FLOATS.md) and to offer
@@ -516,7 +517,7 @@ def geodesic_dest_pandas_udf():
 
 
 def geodesic_km_pandas_udf():
-    """Arrow-batched pandas_udf over karney_inverse_km — the no-geopy
+    """Arrow-batched pandas_udf over karney_inverse_km — the pure-Python
     ellipsoid-exact lane.  Built lazily so importing this module never
     needs an active Spark session."""
     from pyspark.sql.functions import pandas_udf

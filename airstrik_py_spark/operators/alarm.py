@@ -156,8 +156,8 @@ def dead_reckoning(
     (functions/geodesic.py::karney_direct) AND the spherical haversine
     zone distance for the ellipsoid INVERSE solution (karney_inverse_km),
     both via Arrow-batched pandas_udfs — the reference-identical lane,
-    since geopy's destination() / geodesic() are the same Karney direct /
-    inverse problems (airstrik.py:245-259).  Default stays the
+    since the reference's destination() / geodesic() are the same Karney
+    direct / inverse problems (airstrik.py:245-259).  Default stays the
     whole-stage-codegen spherical Column expressions (the 100 TB hot path;
     FLOATS.md §D1 quantifies the per-step divergence at < 0.25%).
 
@@ -215,7 +215,7 @@ def dead_reckoning(
     if exact_geodesic:
         # the zone test is ALSO ellipsoid-exact in this lane (ADVICE r12):
         # the reference measures each simulated point's distance to HOME
-        # with geopy's ellipsoid geodesic (airstrik.py:259), the same
+        # with an ellipsoid geodesic (airstrik.py:259), the same
         # inverse problem karney_inverse_km solves
         from airstrik_py_spark.functions.geodesic import geodesic_km_pandas_udf
 

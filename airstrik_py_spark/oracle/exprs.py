@@ -420,7 +420,7 @@ def _sin_series_sql(sigma: str, coeffs: list[str]) -> str:
 # --- WGS-84 ellipsoid INVERSE problem (Karney 2013 + bisection), SQL mirror --
 # Mirror of functions/geodesic.py::karney_inverse_km for the D1 exact lane's
 # zone distance (ADVICE r12): the reference measures each simulated point's
-# distance to HOME with geopy's ellipsoid geodesic (airstrik.py:259), so the
+# distance to HOME with an ellipsoid geodesic (airstrik.py:259), so the
 # exact lane's engine side calls karney_inverse_km via a pandas_udf and this
 # mirror replays the SAME bisection in SQL — same canonicalization, same
 # per-iteration _karney_eval operand order, same `hi - lo < 1e-15` break,

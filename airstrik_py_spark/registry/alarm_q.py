@@ -65,9 +65,10 @@ def q_alarm_dead_reckoning_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r11 #5 made queryable; ADVICE r12 closed the zone-distance
     half): dead_reckoning(exact_geodesic=True) swaps the spherical
     destination formulas for karney_direct — the same direct problem
-    geopy's destination() solves (airstrik.py:245-258) — and measures each
-    simulated point's distance to HOME with karney_inverse_km, the same
-    inverse problem geopy's geodesic() solves (airstrik.py:259).  Both
+    the reference's destination() solves (airstrik.py:245-258) — and
+    measures each simulated point's distance to HOME with
+    karney_inverse_km, the same inverse problem the reference's
+    geodesic() solves (airstrik.py:259).  Both
     halves of get_alarm_info's geometry are therefore ellipsoid-exact:
     this lane is the reference-identical D1.  The oracle mirrors the
     direct problem as staged SQL with per-plane constants hoisted out of

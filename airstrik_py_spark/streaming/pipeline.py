@@ -23,20 +23,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from airstrik_py_spark.config import EngineConfig
-from airstrik_py_spark.functions.geo import haversine_km
+from airstrik_py_spark.operators import kinematics as K
 
 
-# Measured on the tools/state_grid.py partitions x state-volume grid
-# (STREAMBENCH §state grid): state-store commit overhead is per partition
-# per micro-batch, so below ~this many state rows per partition, extra
-# partitions cost more in commits than they win in parallelism.
+# Measured in r9 on a partitions x state-volume grid over the stream-stream
+# interval join (the grid tool is removed; git history has it): state-store
+# commit overhead is per partition per micro-batch, so below ~this many
+# state rows per partition, extra partitions cost more in commits than
+# they win in parallelism.
 STATE_ROWS_PER_PARTITION = 4000
 
 
 def state_shuffle_partitions(est_state_rows: int, max_partitions: int = 128) -> int:
     """Shuffle-partition count for a STATEFUL streaming query, sized to
-    state VOLUME rather than CPU count (the r8 profile_ssjoin finding,
-    made a formula by the r9 state grid): P = clamp(ceil(state_rows /
+    state VOLUME rather than CPU count (the r8 stream-join profile,
+    made a formula by the r9 state grid; both probe tools are removed,
+    git history has them): P = clamp(ceil(state_rows /
     STATE_ROWS_PER_PARTITION), 1, max_partitions).  est_state_rows for
     the interval join is (clicks + purchases) within the watermark span;
     for keyed aggregations it is the live key count."""
@@ -52,19 +54,6 @@ def configure_state_partitions(spark, est_state_rows: int, max_partitions: int =
     p = state_shuffle_partitions(est_state_rows, max_partitions)
     spark.conf.set("spark.sql.shuffle.partitions", str(p))
     return p
-
-
-def with_stream_distance(obs: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Stateless per-row derivation usable on an unbounded stream."""
-    return obs.withColumn(
-        "distance",
-        F.round(
-            haversine_km(
-                F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("lat"), F.col("lon")
-            ),
-            4,
-        ),
-    )
 
 
 def stream_trips(obs: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -106,7 +95,7 @@ def stream_trips(obs: DataFrame, cfg: EngineConfig) -> DataFrame:
         )
     )
     return (
-        with_stream_distance(obs, cfg)
+        K.with_distance_home(obs, cfg)
         .withWatermark("ts", watermark)
         .groupBy(F.col("hex"), F.session_window("ts", gap))
         .agg(
@@ -235,7 +224,8 @@ def stream_touch_conversion_pairs(
     the streaming join IS the binned form internally (symmetric hash
     join keyed on user, state pruned by watermark).
 
-    Deployment note (r8, tools/profile_ssjoin.py): size
+    Deployment note (r8 stream-join profile; the probe tool is removed,
+    git history has it): size
     spark.sql.shuffle.partitions to state VOLUME, not CPU count — the
     join keeps keyed stores on BOTH sides, each snapshotted per
     partition per micro-batch, so at small state the commit overhead
@@ -357,7 +347,6 @@ def alarm_foreach_batch(cfg: EngineConfig, sink):
     receives the alert/warning payload frame (Kafka write or collect-print
     when no broker is configured, matching the reference's empty-address
     fallback)."""
-    from airstrik_py_spark.operators import kinematics as K
     from airstrik_py_spark.operators.alarm import alarm_payload, dead_reckoning
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:

@@ -1,15 +1,17 @@
-"""Custom keyed-state streaming operator (SURVEY §4 item 3): the reference's
-per-plane ingest bookkeeping that window functions cannot express on an
-unbounded stream — consecutive-duplicate suppression (airstrik.py:576-577),
-the decimation counter (airstrik.py:558, 616-626), and the sticky
-alarm_triggered flag (airstrik.py:277) — as applyInPandasWithState.
+"""Keyed-state streaming operators on applyInPandasWithState.
 
-Batch mode expresses all three with lag/row_number windows
-(operators/kinematics.py, operators/decimation.py); on a stream those
-windows are unsupported, so this is the one place the engine keeps explicit
-state.  State per key is O(1) (last position + two counters), evicted via
-processing-time timeout = 2x the session gap — bounded exactly like the
-reference's `del plane_history[hex]`.
+The plane tracker (SURVEY §4 item 3) is the reference's per-plane ingest
+bookkeeping that window functions cannot express on an unbounded stream:
+consecutive-duplicate suppression (airstrik.py:576-577), the decimation
+counter (airstrik.py:558, 616-626) and the sticky alarm_triggered flag
+(airstrik.py:277).  Batch mode expresses all three with lag/row_number
+windows (operators/kinematics.py, operators/decimation.py).  State per
+plane is O(1) (last position + two counters), evicted via processing-time
+timeout = 2x the session gap — bounded exactly like the reference's
+`del plane_history[hex]`.
+
+The module also holds the streaming last-touch attribution
+(make_attributor), the keyed-state twin of operators/events.py.
 """
 
 from __future__ import annotations
@@ -78,9 +80,13 @@ def make_tracker(cfg: EngineConfig, live: bool = True):
             state.get if state.exists else (None, None, None, 0, 0, 0, False)
         )
         out = []
-        for pdf in batches:
-            pdf = pdf.sort_values("ts_sec")
-            for row in pdf.itertuples(index=False):
+        # one sort over ALL of the key's chunks: a group may arrive split
+        # across Arrow batches in shuffle order, so per-chunk sorts would
+        # count fixes out of time order
+        pdfs = list(batches)
+        if pdfs:
+            pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+            for row in pdf.sort_values("ts_sec").itertuples(index=False):
                 # per-ATTRIBUTE history appends (airstrik.py:574-577): lat and
                 # lon histories grow independently, each only when its value
                 # changed — the sim gate below needs both >= 2

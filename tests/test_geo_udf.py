@@ -1,17 +1,41 @@
 """SURVEY §5.5 numeric pinning: the Catalyst geodesic expressions agree with
 an independent vectorized numpy implementation over the fixture coordinate
-ranges."""
+ranges.  The numpy pandas UDFs below share no code with functions/geo.py;
+they exist only as this cross-check."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
 
-from airstrik_py_spark.functions.geo import bearing_deg, haversine_km
-from airstrik_py_spark.functions.geo_udf import (
-    GEOPY_AVAILABLE,
-    bearing_deg_udf,
-    haversine_km_udf,
-)
+from airstrik_py_spark.functions.geo import EARTH_RADIUS_KM, bearing_deg, haversine_km
+
+
+@pandas_udf(DoubleType())
+def haversine_km_udf(
+    lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series
+) -> pd.Series:
+    """Vectorized numpy haversine — independent of the Column expression."""
+    p1, p2 = np.radians(lat1), np.radians(lat2)
+    dp = np.radians(lat2 - lat1) / 2.0
+    dl = np.radians(lon2 - lon1) / 2.0
+    a = np.sin(dp) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dl) ** 2
+    return pd.Series(2.0 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(a)))
+
+
+@pandas_udf(DoubleType())
+def bearing_deg_udf(
+    lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series
+) -> pd.Series:
+    """Vectorized numpy initial bearing, [0, 360)."""
+    p1, p2 = np.radians(lat1), np.radians(lat2)
+    dl = np.radians(lon2 - lon1)
+    y = np.sin(dl) * np.cos(p2)
+    x = np.cos(p1) * np.sin(p2) - np.sin(p1) * np.cos(p2) * np.cos(dl)
+    return pd.Series(np.mod(np.degrees(np.arctan2(y, x)) + 360.0, 360.0))
 
 
 def _grid(spark):
@@ -40,13 +64,3 @@ def test_bearing_expression_vs_numpy_udf(spark):
     )
     worst = df.select(F.max(F.abs(F.col("expr") - F.col("udf"))).alias("d")).first()["d"]
     assert worst < 1e-9
-
-
-def test_geopy_fallback_guarded():
-    from airstrik_py_spark.functions.geo_udf import geodesic_km_udf
-
-    if not GEOPY_AVAILABLE:
-        import pytest
-
-        with pytest.raises(NotImplementedError, match="geopy not installed"):
-            geodesic_km_udf()

@@ -1,7 +1,7 @@
 """WGS-84 geodesic lane (VERDICT r10 #7): Karney 2013 and Vincenty 1975
 are implemented independently (functions/geodesic.py shares no math
 between them) — their mutual agreement IS the correctness evidence, since
-neither geopy nor geographiclib exists in this container to compare
+no third-party geodesic package is installed to compare
 against.  Sub-millimetre agreement over random pairs would require the
 same wrong series coefficients in two unrelated formulations."""
 

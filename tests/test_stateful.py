@@ -6,20 +6,21 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import functions as F
+import pandas as pd
+import pytest
 
 from airstrik_py_spark.config import EngineConfig
+from airstrik_py_spark.operators.kinematics import with_distance_home
 from airstrik_py_spark.sources.snapshot import read_snapshot_stream
-from airstrik_py_spark.streaming.pipeline import with_stream_distance
-from airstrik_py_spark.streaming.stateful import tracked_stream
+from airstrik_py_spark.streaming.stateful import make_tracker, tracked_stream
 
 CFG = EngineConfig(decimation_factor=2, remember_s=60.0)
 BASE = 1700000000.0
 
 
-def _tape(tmpdir: str) -> None:
+def _tape(tmpdir: str, alt: dict) -> None:
     """Plane 'a': 5 snapshots, the 2nd is a duplicate position, the 4th is
-    inside the 10 km geofence."""
+    inside the 10 km geofence.  `alt` is merged into every aircraft."""
     positions = [
         (35.90, -78.70),
         (35.90, -78.70),  # duplicate -> suppressed
@@ -31,31 +32,36 @@ def _tape(tmpdir: str) -> None:
         snap = {
             "now": BASE + 10 * i,
             "aircraft": [
-                {"hex": "a", "lat": lat, "lon": lon, "alt_geom": 500.0, "seen": 0.1}
+                {"hex": "a", "lat": lat, "lon": lon, "seen": 0.1, **alt}
             ],
         }
         with open(os.path.join(tmpdir, f"s{i:03d}.json"), "w") as f:
             json.dump(snap, f)
 
 
-def test_stateful_tracker_stream(spark, tmp_path):
+# no alt_geom at all: the sticky flag's missing-altitude branch
+# (last_alt is None passes the ceiling)
+@pytest.mark.parametrize(
+    "alt, name",
+    [({"alt_geom": 500.0}, "tracked"), ({}, "tracked_no_alt")],
+    ids=["alt_500m", "no_alt"],
+)
+def test_stateful_tracker_stream(spark, tmp_path, alt, name):
     tape = str(tmp_path / "tape")
     os.makedirs(tape)
-    _tape(tape)
+    _tape(tape, alt)
 
-    stream = with_stream_distance(read_snapshot_stream(spark, tape), CFG)
+    stream = with_distance_home(read_snapshot_stream(spark, tape), CFG)
     q = (
         tracked_stream(stream, CFG, live=False)
         .writeStream.outputMode("append")
         .format("memory")
-        .queryName("tracked")
+        .queryName(name)
         .start()
     )
     q.processAllAvailable()
     q.stop()
-    rows = sorted(
-        spark.table("tracked").collect(), key=lambda r: r["ts_sec"]
-    )
+    rows = sorted(spark.table(name).collect(), key=lambda r: r["ts_sec"])
 
     # duplicate suppressed: 4 of 5 updates survive
     assert len(rows) == 4
@@ -74,7 +80,7 @@ def _run_tape(spark, tmp_path, snaps, name):
     for i, snap in enumerate(snaps):
         with open(os.path.join(tape, f"s{i:03d}.json"), "w") as f:
             json.dump(snap, f)
-    stream = with_stream_distance(read_snapshot_stream(spark, tape), CFG)
+    stream = with_distance_home(read_snapshot_stream(spark, tape), CFG)
     q = (
         tracked_stream(stream, CFG, live=False)
         .writeStream.outputMode("append")
@@ -116,3 +122,33 @@ def test_suppressed_packet_still_evaluates_alarm(spark, tmp_path):
     ]
     rows = _run_tape(spark, tmp_path, snaps, "suppressed_alarm")
     assert [r["alarm_triggered"] for r in rows] == [False, False, True]
+
+
+class _FreshState:
+    """The GroupState surface `make_tracker` touches, for a key with no
+    prior state."""
+
+    hasTimedOut = False
+    exists = False
+
+    def update(self, value):
+        self.value = value
+
+
+def test_tracker_orders_fixes_across_chunks():
+    """applyInPandasWithState can hand one key's rows over in several
+    pandas chunks, in shuffle order: the counter must follow event time
+    across chunks, not within each chunk."""
+    fixes = pd.DataFrame(
+        {
+            "hex": "a",
+            "ts_sec": [BASE + 10 * i for i in range(4)],
+            "lat": [35.90, 35.85, 35.80, 35.75],
+            "lon": -78.70,
+            "alt_geom": 500.0,
+            "distance": [19.0, 13.6, 8.0, 2.5],
+        }
+    )
+    chunks = iter([fixes.iloc[2:], fixes.iloc[:2]])  # later fixes first
+    out = pd.concat(make_tracker(CFG, live=False)(("a",), chunks, _FreshState()))
+    assert out.sort_values("ts_sec")["update_seq"].tolist() == [1, 2, 3, 4]

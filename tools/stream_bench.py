@@ -166,10 +166,10 @@ def throughput_section(spark, sf_dir: str, scratch: str) -> dict[str, dict]:
         _drain(lambda: stream_attribution(ev_stream(), live=False)),
     )
 
-    # r8 profile (tools/profile_ssjoin.py): this lane's cost is NOT the
-    # join — it is per-partition state-store COMMIT overhead (the
-    # symmetric join keeps keyed stores on BOTH sides, snapshotted per
-    # partition per micro-batch; cumulative stateCommitMs 52 s of an
+    # r8 profile (a probe tool since removed; git history has it): this
+    # lane's cost is NOT the join — it is per-partition state-store COMMIT
+    # overhead (the symmetric join keeps keyed stores on BOTH sides,
+    # snapshotted per partition per micro-batch; cumulative stateCommitMs 52 s of an
     # 8.3 s wall at 32 partitions).  8 partitions ran 3.4x faster
     # (2.45 s, 40.8 k rows/s) on identical results; RocksDB and a
     # tighter watermark moved nothing.  Size state partitions to state
@@ -402,7 +402,8 @@ def main() -> None:
             "its input column counts BOTH streams' rows once (one tape",
             "feeds both sides), and its state is the watermark-pruned",
             "click/purchase buffers.  It runs at 8 state partitions since",
-            "r8: tools/profile_ssjoin.py isolated the old 10.9 k rows/s to",
+            "r8: a one-off probe tool (since removed, git history has it)",
+            "isolated the old 10.9 k rows/s to",
             "per-partition state-store COMMIT overhead (both sides keep",
             "keyed stores, snapshotted per partition per micro-batch —",
             "cumulative stateCommitMs was 52 s of an 8.3 s wall at 32",
