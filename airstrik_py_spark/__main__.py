@@ -13,6 +13,7 @@ user can switch 1:1:
 from __future__ import annotations
 
 import argparse
+import sys
 
 from airstrik_py_spark.config import REFERENCE, load_config
 from airstrik_py_spark.session import get_spark
@@ -29,16 +30,24 @@ def _landing(args, cfg):
 
 
 def _batch_obs(spark, landing_dir):
-    from airstrik_py_spark.sources.snapshot import read_snapshot_batch
+    """Observations from the well-formed snapshots; malformed ones are
+    reported on stderr, never dropped silently."""
+    from airstrik_py_spark.sources.snapshot import read_snapshot_batch_quarantined
 
-    return read_snapshot_batch(spark, landing_dir)
+    obs, quarantine = read_snapshot_batch_quarantined(spark, landing_dir)
+    bad = [r["src_file"] for r in quarantine.collect()]
+    if bad:
+        print(
+            f"{len(bad)} malformed snapshot(s) quarantined: {', '.join(bad)}",
+            file=sys.stderr,
+        )
+    return obs
 
 
-def _trips(spark, cfg, landing_dir):
+def _trips(obs, cfg):
     from airstrik_py_spark.operators import kinematics as K
     from airstrik_py_spark.operators import sessions as S
 
-    obs = _batch_obs(spark, landing_dir)
     sess = S.with_session_id(K.with_distance_home(obs, cfg), cfg)
     return S.filter_min_trip_length(S.trips_with_asof(sess, cfg), cfg)
 
@@ -119,7 +128,7 @@ def cmd_repl(args) -> None:
     from airstrik_py_spark.repl import Repl
 
     obs = _batch_obs(spark, _landing(args, cfg))
-    repl = Repl(spark, obs, _trips(spark, cfg, _landing(args, cfg)))
+    repl = Repl(spark, obs, _trips(obs, cfg))
     if args.command:
         try:
             for df in repl.execute(args.command):
@@ -151,7 +160,7 @@ def cmd_csvdump(args) -> None:
     from airstrik_py_spark.operators import stats as ST
     from airstrik_py_spark.sinks import write_csv
 
-    trips = _trips(spark, cfg, _landing(args, cfg))
+    trips = _trips(_batch_obs(spark, _landing(args, cfg)), cfg)
     if args.mode == "trip":
         # csvdump.py:88-90 writes human-readable datetimes, not epochs
         def fmt(col):

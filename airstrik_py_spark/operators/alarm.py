@@ -6,12 +6,15 @@ is the one genuinely custom operator: per plane, simulate positions
 t = 0..think_ahead-1 seconds ahead along the current heading at the current
 speed and find the first second entering the widest geofence.  We unroll the
 simulation relationally — explode(sequence(...)) -> forward-geodesic per
-step -> window-based early-exit replication -> aggregate — all whole-stage
-codegen, no Python.  The row multiplier (think_ahead) is gated on "heading
-and speed available" BEFORE the explode, so Catalyst never materializes steps
-for planes that can't simulate.  At 100 TB the unroll is embarrassingly
+step -> window-based early-exit replication -> aggregate; in the default
+spherical geometry all of it is whole-stage codegen, no Python.  The row
+multiplier (think_ahead) is gated on "heading and speed available" BEFORE
+the explode, so Catalyst never materializes steps for planes that can't
+simulate.  At 100 TB the unroll is embarrassingly
 parallel (partition-local; the step windows repartition on (hex, event_id)
-which is finer than hex — no skew possible).
+which is finer than hex — no skew possible).  `latest_fix` builds the
+per-plane state D1 reads, for the registered slugs and the live callback
+alike.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from pyspark.sql import functions as F
 
 from airstrik_py_spark.config import EngineConfig
 from airstrik_py_spark.functions.geo import dest_lat_deg, dest_lon_deg, haversine_km
+from airstrik_py_spark.operators import kinematics as K
 
 # Reference sentinel: min_radius when the zone is never entered
 # (airstrik.py:232 `min_radius = 100000000`).
@@ -42,35 +46,92 @@ def matched_filters(dist: Column, alt: Column, cfg: EngineConfig) -> Column:
     return F.concat_ws(",", *parts)
 
 
-def _dead_reckoning_steps(
-    df: DataFrame, cfg: EngineConfig, heading: Column, can_sim: Column
-) -> DataFrame:
-    """The spherical D1 lane as ONE explode+window pass (r16 adjudication).
+def latest_fix(obs: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Latest fix per plane with kinematics attached (the reference's
+    plane_history[-1] state, no consecutive-dedup so every event counts).
 
-    History of the shape, because this lane has now been measured three
-    ways: (r14) explode(sequence) -> windows -> groupBy -> JOIN back onto
-    `df` evaluated the ENTIRE upstream kinematics pipeline twice (probe
-    and build subtrees differ, nothing reuses: plans/r15/
-    alarm_dead_reckoning_before.txt); (r15) one per-row `F.aggregate`
-    fold killed the join and the 60x row blowup, but higher-order
-    functions are CodegenFallback — the 60-step loop ran INTERPRETED per
-    row, which the r15 paired A/B flagged as a bench-scale regression.
-    This r16 shape takes the best of both: explode ALL rows (can_sim
-    rows fan out to the think_ahead steps, non-sim rows to a single t=0
-    row so none are lost), compute every step position/distance/flag in
-    whole-stage codegen, resolve the break/alarm aggregates as WINDOW
-    functions over (hex, event_id), and keep only the t=0 row — one
-    upstream evaluation, zero joins, zero interpreted expressions.  The
-    window sort is partition-local: the input is already hash-clustered
-    by hex (hashpartitioning(hex) satisfies the window's (hex, event_id)
+    Scale shape: the kinematics windows only ever look lookback_rows back,
+    so each key is first pruned to its last lookback_rows+1 rows with one
+    cheap rank window, the kinematics run on that sliver, and the top row
+    is kept — identical values, ~10x less window compute (and at 100 TB,
+    the prune is the difference between reranking a key's tail and
+    re-deriving its entire history)."""
+    w_desc = Window.partitionBy("hex").orderBy(
+        F.col("ts_sec").desc(), F.col("event_id").desc()
+    )
+    tail = obs.withColumn("_rn", F.row_number().over(w_desc)).filter(
+        F.col("_rn") <= cfg.lookback_rows + 1
+    )
+    kin = K.with_distance_home(K.with_calc_speed(K.with_calc_heading(tail), cfg), cfg)
+    return kin.filter("_rn = 1").drop("_rn")
+
+
+def _spherical_geometry(sim: DataFrame, step_km: Column, cfg: EngineConfig) -> DataFrame:
+    """Step position by the spherical forward geodesic and zone distance by
+    haversine — Column expressions, whole-stage codegen."""
+    sim = sim.withColumn("_slat", dest_lat_deg(F.col("lat"), F.col("_shdg"), step_km))
+    sim = sim.withColumn(
+        "_slon",
+        dest_lon_deg(F.col("lat"), F.col("lon"), F.col("_slat"), F.col("_shdg"), step_km),
+    )
+    return sim.withColumn(
+        "_sdist",
+        haversine_km(F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("_slat"), F.col("_slon")),
+    )
+
+
+def _exact_geometry(sim: DataFrame, step_km: Column, cfg: EngineConfig) -> DataFrame:
+    """Step position by the WGS-84 Karney direct problem and zone distance
+    by the Karney inverse problem, both Arrow-batched pandas_udfs.  A
+    pandas_udf sees every row, including the single t=0 row of a fix that
+    cannot simulate, so those rows get NULL-free dummy inputs; the zone
+    test ignores them through can_sim."""
+    from airstrik_py_spark.functions.geodesic import (
+        geodesic_dest_pandas_udf,
+        geodesic_km_pandas_udf,
+    )
+
+    def sim_only(c: Column) -> Column:
+        return F.when(F.col("can_sim"), c).otherwise(F.lit(0.0))
+
+    dest = geodesic_dest_pandas_udf()(
+        sim_only(F.col("lat")), sim_only(F.col("lon")), sim_only(F.col("_shdg")), sim_only(step_km)
+    )
+    sim = (
+        sim.withColumn("_spt", dest)
+        .withColumn("_slat", F.col("_spt.lat"))
+        .withColumn("_slon", F.col("_spt.lon"))
+        .drop("_spt")
+    )
+    return sim.withColumn(
+        "_sdist",
+        geodesic_km_pandas_udf()(
+            F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("_slat"), F.col("_slon")
+        ),
+    )
+
+
+def _dead_reckoning_steps(
+    df: DataFrame, cfg: EngineConfig, heading: Column, can_sim: Column, geometry
+) -> DataFrame:
+    """D1 as ONE explode+window pass; `geometry` (step position + zone
+    distance) is the only part that varies.
+
+    Explode ALL rows (can_sim rows fan out to the think_ahead steps,
+    non-sim rows to a single t=0 row so none are lost), compute every
+    step position/distance/flag, resolve the break/alarm aggregates as
+    WINDOW functions over (hex, event_id), and keep only the t=0 row:
+    one upstream evaluation, no join.  The window sort is
+    partition-local: the input is already hash-clustered by hex
+    (hashpartitioning(hex) satisfies the window's (hex, event_id)
     clustering requirement), so no new exchange is introduced.
 
-    Replicated break semantics (bit-identical to both prior shapes,
-    oracle-checked): steps at or after the first out-of-bounds or
-    distance-growth step are dead; the growth-break step's own flags
-    can never change the outputs (it is in-zone with a prior in-zone
-    step, so alarm_ll/alarm_time are already set and its dist exceeds
-    the running min), so `t < first_break` suffices.
+    Replicated break semantics (oracle-checked): steps at or after the
+    first out-of-bounds or distance-growth step are dead; the
+    growth-break step's own flags can never change the outputs (it is
+    in-zone with a prior in-zone step, so alarm_ll/alarm_time are
+    already set and its dist exceeds the running min), so
+    `t < first_break` suffices.
     """
     horizon = F.lit(int(cfg.think_ahead))
     sim = (
@@ -86,16 +147,7 @@ def _dead_reckoning_steps(
         )
     )
     step_km = (F.col("calc_speed") / 3600.0) * F.col("_t")
-    slat = dest_lat_deg(F.col("lat"), F.col("_shdg"), step_km)
-    sim = sim.withColumn("_slat", slat)
-    sim = sim.withColumn(
-        "_slon",
-        dest_lon_deg(F.col("lat"), F.col("lon"), F.col("_slat"), F.col("_shdg"), step_km),
-    )
-    sim = sim.withColumn(
-        "_sdist",
-        haversine_km(F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("_slat"), F.col("_slon")),
-    )
+    sim = geometry(sim, step_km, cfg)
     in_zone = F.col("can_sim") & (F.col("_sdist") < F.lit(cfg.most_generous_dist_km))
     oob = (F.abs(F.col("_slat")) > 90.0) | (F.abs(F.col("_slon")) > 90.0)
 
@@ -159,7 +211,8 @@ def dead_reckoning(
     since the reference's destination() / geodesic() are the same Karney
     direct / inverse problems (airstrik.py:245-259).  Default stays the
     whole-stage-codegen spherical Column expressions (the 100 TB hot path;
-    FLOATS.md §D1 quantifies the per-step divergence at < 0.25%).
+    FLOATS.md §D1 quantifies the per-step divergence at < 0.25%).  Both
+    run the same explode+window pass; the flag selects only the geometry.
 
     Input: one row per plane-fix with `hex, event_id, lat, lon, calc_heading,
     nav_heading, calc_speed, alt_geom, distance`.  Replicated semantics:
@@ -178,116 +231,8 @@ def dead_reckoning(
     """
     heading = F.coalesce(F.col("calc_heading"), F.col("nav_heading"))
     can_sim = heading.isNotNull() & F.col("calc_speed").isNotNull()
-    horizon = F.lit(int(cfg.think_ahead))
-
-    if not exact_geodesic:
-        return _dead_reckoning_steps(df, cfg, heading, can_sim)
-
-    sim = (
-        df.select("hex", "event_id", "lat", "lon", "calc_speed", heading.alias("sim_heading"))
-        .filter(can_sim)
-        .withColumn("t", F.explode(F.sequence(F.lit(0), horizon - 1)))
-    )
-    step_km = (F.col("calc_speed") / 3600.0) * F.col("t")
-    if exact_geodesic:
-        from airstrik_py_spark.functions.geodesic import geodesic_dest_pandas_udf
-
-        dest = geodesic_dest_pandas_udf()
-        sim = (
-            sim.withColumn(
-                "sim_pt",
-                dest(F.col("lat"), F.col("lon"), F.col("sim_heading"), step_km),
-            )
-            .withColumn("sim_lat", F.col("sim_pt.lat"))
-            .withColumn("sim_lon", F.col("sim_pt.lon"))
-            .drop("sim_pt")
-        )
-    else:
-        sim = sim.withColumn(
-            "sim_lat", dest_lat_deg(F.col("lat"), F.col("sim_heading"), step_km)
-        )
-        sim = sim.withColumn(
-            "sim_lon",
-            dest_lon_deg(
-                F.col("lat"), F.col("lon"), F.col("sim_lat"), F.col("sim_heading"), step_km
-            ),
-        )
-    if exact_geodesic:
-        # the zone test is ALSO ellipsoid-exact in this lane (ADVICE r12):
-        # the reference measures each simulated point's distance to HOME
-        # with an ellipsoid geodesic (airstrik.py:259), the same
-        # inverse problem karney_inverse_km solves
-        from airstrik_py_spark.functions.geodesic import geodesic_km_pandas_udf
-
-        geo_km = geodesic_km_pandas_udf()
-        sim = sim.withColumn(
-            "sim_dist",
-            geo_km(
-                F.lit(cfg.home_lat),
-                F.lit(cfg.home_lon),
-                F.col("sim_lat"),
-                F.col("sim_lon"),
-            ),
-        )
-    else:
-        sim = sim.withColumn(
-            "sim_dist",
-            haversine_km(
-                F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("sim_lat"), F.col("sim_lon")
-            ),
-        )
-
-    in_zone = F.col("sim_dist") < F.lit(cfg.most_generous_dist_km)
-    oob = (F.abs(F.col("sim_lat")) > 90.0) | (F.abs(F.col("sim_lon")) > 90.0)
-
-    step_w = Window.partitionBy("hex", "event_id").orderBy("t")
-    before = step_w.rowsBetween(Window.unboundedPreceding, -1)
-    full_w = Window.partitionBy("hex", "event_id")
-
-    prev_zone_dist = F.last(F.when(in_zone, F.col("sim_dist")), ignorenulls=True).over(before)
-    growth = in_zone & prev_zone_dist.isNotNull() & (F.col("sim_dist") > prev_zone_dist)
-
-    flagged = sim.select(
-        "hex",
-        "event_id",
-        "t",
-        "sim_dist",
-        in_zone.alias("in_zone"),
-        F.min(F.when(oob, F.col("t"))).over(full_w).alias("b_oob"),
-        F.min(F.when(growth, F.col("t"))).over(full_w).alias("b_grow"),
-    )
-    # Steps strictly before the first break survive.  The growth-break step's
-    # own flags also count in the reference, but can never change the outputs
-    # (it is in-zone with a prior in-zone step, so alarm_ll/alarm_time are
-    # already set and its dist > min_radius) — so t < first_break suffices.
-    first_break = F.least(
-        F.coalesce(F.col("b_oob"), horizon), F.coalesce(F.col("b_grow"), horizon)
-    )
-    live = flagged.filter(F.col("t") < first_break)
-
-    agg = live.groupBy("hex", "event_id").agg(
-        F.max(F.col("in_zone")).alias("sim_alarm_ll"),
-        F.min(F.when(F.col("in_zone"), F.col("t"))).alias("sim_alarm_time"),
-        F.min(F.when(F.col("in_zone"), F.col("sim_dist"))).alias("sim_min_radius"),
-    )
-
-    alt_ok = F.col("alt_geom").isNull() | (
-        F.col("alt_geom") <= F.lit(cfg.most_generous_alt_m)
-    )
-    return (
-        df.withColumn("can_sim", can_sim)
-        .join(agg, ["hex", "event_id"], "left")
-        .withColumn("alarm_ll", F.coalesce(F.col("sim_alarm_ll"), F.lit(False)))
-        .withColumn("alarm_time", F.coalesce(F.col("sim_alarm_time"), F.lit(-1)))
-        .withColumn(
-            "min_radius",
-            F.when(~F.col("can_sim"), F.lit(0.0)).otherwise(
-                F.round(F.coalesce(F.col("sim_min_radius"), F.lit(MIN_RADIUS_SENTINEL)), 4)
-            ),
-        )
-        .withColumn("alarm", F.col("alarm_ll") & alt_ok)
-        .drop("sim_alarm_ll", "sim_alarm_time", "sim_min_radius")
-    )
+    geometry = _exact_geometry if exact_geodesic else _spherical_geometry
+    return _dead_reckoning_steps(df, cfg, heading, can_sim, geometry)
 
 
 def alarm_payload(df: DataFrame, cfg: EngineConfig) -> DataFrame:

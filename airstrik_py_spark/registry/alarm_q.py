@@ -3,12 +3,11 @@ D2 alert/warning payload routing (SURVEY §2.6)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airstrik_py_spark.config import REFERENCE
 from airstrik_py_spark.operators import alarm as AL
-from airstrik_py_spark.operators import kinematics as K
 from airstrik_py_spark.oracle.exprs import (
     dead_reckoning_ctes,
     dead_reckoning_exact_ctes,
@@ -20,36 +19,12 @@ from airstrik_py_spark.sources.tables import observations
 CFG = REFERENCE  # think_ahead/geofences at reference values
 
 
-def _latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest fix per plane with kinematics attached (the reference's
-    plane_history[-1] state, no consecutive-dedup so every event counts).
-
-    Scale shape: the expensive trig windows only ever look lookback_rows
-    back, so we first prune each key to its last lookback_rows+1 rows with
-    one cheap rank window, run kinematics on that sliver, then keep the top
-    row — identical values, ~10x less window compute (and at 100 TB, the
-    prune is the difference between reranking a key's tail and re-deriving
-    its entire history)."""
-    pin_session(spark)
-    obs = observations(spark, sf_dir)
-    w_desc = Window.partitionBy("hex").orderBy(
-        F.col("ts_sec").desc(), F.col("event_id").desc()
-    )
-    tail = (
-        obs.withColumn("_rn", F.row_number().over(w_desc))
-        .filter(F.col("_rn") <= CFG.lookback_rows + 1)
-    )
-    kin = K.with_distance_home(
-        K.with_calc_speed(K.with_calc_heading(tail), CFG), CFG
-    )
-    return kin.filter("_rn = 1").drop("_rn")
-
-
 def q_alarm_dead_reckoning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 — get_alarm_info unrolled (airstrik.py:223-278): per plane, the
     (alarm, alarm_time, min_radius) triple from simulating think_ahead
     seconds along the current heading."""
-    out = AL.dead_reckoning(_latest_state(spark, sf_dir), CFG)
+    pin_session(spark)
+    out = AL.dead_reckoning(AL.latest_fix(observations(spark, sf_dir), CFG), CFG)
     return out.select(
         "hex",
         "can_sim",
@@ -77,7 +52,10 @@ def q_alarm_dead_reckoning_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     karney_inverse_sim_dist_ctes).  Verification lane: the Arrow-batched
     pandas_udfs are NOT the 100 TB hot path (the spherical
     alarm_dead_reckoning is; FLOATS.md §D1 quantifies the divergence)."""
-    out = AL.dead_reckoning(_latest_state(spark, sf_dir), CFG, exact_geodesic=True)
+    pin_session(spark)
+    out = AL.dead_reckoning(
+        AL.latest_fix(observations(spark, sf_dir), CFG), CFG, exact_geodesic=True
+    )
     return out.select(
         "hex",
         "can_sim",
@@ -91,7 +69,8 @@ def q_alarm_dead_reckoning_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_alarm_event_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2 — raise_alarm payload assembly + topic routing
     (airstrik.py:318-368, README.md:57-68)."""
-    state = AL.dead_reckoning(_latest_state(spark, sf_dir), CFG)
+    pin_session(spark)
+    state = AL.dead_reckoning(AL.latest_fix(observations(spark, sf_dir), CFG), CFG)
     pay = AL.alarm_payload(state, CFG)
     return pay.select(
         "plane_hex",

@@ -19,7 +19,6 @@ from airstrik_py_spark.oracle.exprs import (
     kin_ctes,
     session_ctes,
 )
-from airstrik_py_spark.registry.alarm_q import _latest_state
 from airstrik_py_spark.registry.kinematics_q import TS_FMT_DUCK, TS_FMT_SPARK
 from airstrik_py_spark.registry.search_q import PREDICATES
 from airstrik_py_spark.session import pin_session
@@ -113,7 +112,10 @@ def q_sink_kafka_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 — alert/warning topic routing summary (raise_alarm, airstrik.py:
     318-368): events and distinct planes per Kafka topic.  The JSON value
     serialization itself is to_json at the writeStream edge (sinks/)."""
-    state = AL.dead_reckoning(_latest_state(spark, sf_dir), REFERENCE)
+    pin_session(spark)
+    state = AL.dead_reckoning(
+        AL.latest_fix(observations(spark, sf_dir), REFERENCE), REFERENCE
+    )
     pay = AL.alarm_payload(state, REFERENCE)
     return pay.groupBy("topic").agg(
         F.count("*").alias("n_events"),

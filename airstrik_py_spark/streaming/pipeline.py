@@ -342,34 +342,16 @@ def run_to_memory(trips_stream: DataFrame, name: str) -> None:
 
 def alarm_foreach_batch(cfg: EngineConfig, sink):
     """The live alarm path (airstrik.py:697->578-580->223-368) as a
-    foreachBatch: each micro-batch is a bounded DataFrame, so the
-    window-dependent kinematics + D1 unroll run as-is per batch; `sink`
-    receives the alert/warning payload frame (Kafka write or collect-print
-    when no broker is configured, matching the reference's empty-address
-    fallback)."""
-    from airstrik_py_spark.operators.alarm import alarm_payload, dead_reckoning
+    foreachBatch: each micro-batch is a bounded DataFrame, and runs the
+    `alarm_event_routing` slug's composition (latest_fix -> dead_reckoning
+    -> alarm_payload) over that batch's fixes.  `sink` receives the
+    alert/warning payload frame (Kafka write or collect-print when no
+    broker is configured, matching the reference's empty-address
+    fallback); an empty batch hands it an empty frame."""
+    from airstrik_py_spark.operators.alarm import alarm_payload, dead_reckoning, latest_fix
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        kin = K.with_distance_home(
-            K.with_calc_speed(K.with_calc_heading(batch_df), cfg), cfg
-        )
-        latest = K.latest_per_key(
-            kin,
-            [
-                "lat",
-                "lon",
-                "flight",
-                "nav_heading",
-                "alt_geom",
-                "seen",
-                "calc_heading",
-                "calc_speed",
-                "distance",
-            ],
-        ).join(kin.groupBy("hex").agg(F.max("event_id").alias("event_id")), "hex")
-        sink(alarm_payload(dead_reckoning(latest, cfg), cfg), epoch_id)
+        sink(alarm_payload(dead_reckoning(latest_fix(batch_df, cfg), cfg), cfg), epoch_id)
 
     return run
 

@@ -3,11 +3,13 @@ retreat -> no alarm; eta <= think_ahead property (SURVEY §5.4)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
 from airstrik_py_spark.config import REFERENCE
 from airstrik_py_spark.operators import alarm as AL
-from airstrik_py_spark.operators import kinematics as K
 from tests.conftest import obs_rows
 
 BASE = 1700000000.0
@@ -15,21 +17,7 @@ CFG = REFERENCE  # home 35.727,-78.696; zone 10 km; think_ahead 60 s
 
 
 def _state(spark, rows):
-    df = obs_rows(spark, rows)
-    kin = K.with_distance_home(
-        K.with_calc_speed(K.with_calc_heading(df), CFG), CFG
-    )
-    latest = K.latest_per_key(
-        kin,
-        ["lat", "lon", "flight", "nav_heading", "alt_geom", "seen",
-         "calc_heading", "calc_speed", "distance"],
-    ).join(
-        kin.select("hex", "ts_sec", "event_id").groupBy("hex").agg(
-            F.max("event_id").alias("event_id")
-        ),
-        "hex",
-    )
-    return latest
+    return AL.latest_fix(obs_rows(spark, rows), CFG)
 
 
 def test_approaching_plane_warns_with_eta(spark):
@@ -139,3 +127,41 @@ def test_growth_break_keeps_perigee_radius(spark):
     assert 0 < out["alarm_time"] < cfg.think_ahead
     # perigee must be well inside the zone and non-negative
     assert 0.0 <= out["min_radius"] < 10.0
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+@pytest.mark.parametrize(
+    "slug",
+    [
+        "alarm_dead_reckoning",
+        "alarm_dead_reckoning_exact",
+        "alarm_event_routing",
+        "sink_kafka_alert",
+    ],
+)
+def test_latest_fix_slugs_match_oracle(spark, slug, sf):
+    """The slugs built on latest_fix + dead_reckoning, Spark vs their DuckDB
+    oracle, compared the way tools/check.py compares them (bit-exact), on
+    the fixtures beside the smoke fixture.  sf0.01 is included because at
+    sf0.001 no plane raises an alert, so the two routing slugs are empty on
+    both sides there."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from airstrik_py_spark.sources.tables import TABLES
+    from tools.check import canon_rows
+
+    sf_dir = str(Path(entrymod.SMOKE_SF_DIR).parent / sf)
+    if not Path(sf_dir).exists():
+        pytest.skip(f"{sf_dir} absent")
+    duck = duckdb.connect()
+    for t in TABLES:
+        duck.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    cur = duck.execute(entrymod.oracle_sql()[slug])
+    ocols = [d[0] for d in cur.description]
+    orows = cur.fetchall()
+    sdf = entrymod.queries()[slug](spark, sf_dir)
+    assert sorted(sdf.columns) == sorted(ocols)
+    assert canon_rows(sdf.columns, sdf.collect()) == canon_rows(ocols, orows)

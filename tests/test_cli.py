@@ -71,8 +71,8 @@ def test_trigger_kwargs_from_json_speed():
     }
 
 
-def test_csvdump_subcommand(tmp_path):
-    tape = tmp_path / "tape"
+def _one_plane_tape(tape) -> None:
+    """Plane `a1` in four snapshots 40 s apart: one 120 s trip."""
     os.makedirs(tape)
     for i in range(4):
         snap = {
@@ -83,6 +83,11 @@ def test_csvdump_subcommand(tmp_path):
             ],
         }
         (tape / f"s{i}.json").write_text(json.dumps(snap))
+
+
+def test_csvdump_subcommand(tmp_path):
+    tape = tmp_path / "tape"
+    _one_plane_tape(tape)
     out = tmp_path / "csv"
     res = subprocess.run(
         [sys.executable, "-m", "airstrik_py_spark", "csvdump",
@@ -172,3 +177,20 @@ def test_live_run_exits_when_trip_query_fails(tmp_path):
     )
     assert res.returncode != 0
     assert "trips written under" not in res.stdout
+
+
+def test_repl_reports_malformed_snapshot(tmp_path):
+    """A malformed snapshot is named on stderr (not dropped silently) and
+    the well-formed ones still make their trips."""
+    tape = tmp_path / "tape"
+    _one_plane_tape(tape)
+    (tape / "bad.json").write_text('{"now": 1700000200.0, "aircraft": [')
+    res = subprocess.run(
+        [sys.executable, "-m", "airstrik_py_spark", "repl",
+         "--landing-dir", str(tape), "--command", "list"],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert "1 malformed snapshot(s) quarantined: " in res.stderr
+    assert "bad.json" in res.stderr
+    assert "a1" in res.stdout

@@ -72,3 +72,19 @@ def test_stream_alarm_payloads(spark, tmp_path, max_files):
     assert w["plane_hex"] == "aa"
     assert 0 < w["eta"] <= REFERENCE.think_ahead
     assert w["plane_id"] == "DAL1"
+
+
+def test_empty_batch_hands_sink_an_empty_payload(spark, tmp_path):
+    """A snapshot with no aircraft makes an empty micro-batch: the callback
+    must run the composition without error and hand the sink zero rows."""
+    tape = tmp_path / "tape"
+    os.makedirs(tape)
+    (tape / "s0.json").write_text(json.dumps({"now": BASE, "aircraft": []}))
+    calls = []
+
+    def sink(pay_df, epoch_id):
+        calls.append((epoch_id, pay_df.collect()))
+
+    batch = flatten_snapshots(spark.read.schema(SNAPSHOT_SCHEMA).json(str(tape)))
+    alarm_foreach_batch(REFERENCE, sink)(batch, 0)
+    assert calls == [(0, [])]
