@@ -33,8 +33,7 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the sessionized trip pipeline (the reference's raison
     d'être — airstrik.py:473-627) over the sf0.001 observation stream."""
-    name = "agg_trip_assembly" if "agg_trip_assembly" in _QUERIES else "topk_by_distance"
-    return _QUERIES[name](spark, SMOKE_SF_DIR)
+    return _QUERIES["agg_trip_assembly"](spark, SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

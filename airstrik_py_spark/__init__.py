@@ -25,7 +25,7 @@ Layout (SURVEY.md §7):
   operators/search.py     F6 predicate search, J3 ts-conjunction
   operators/dedup.py      exact / minhash-LSH / simhash / ngram-jaccard dedup
   operators/similarity.py brute-force + LSH-bucketed ANN over embeddings
-  operators/multimodal.py binary-column plumbing with stubbed decoders
+  operators/multimodal.py binary-column plumbing over real PNG/BMP/WAV decode
   sinks/                  S3-S9 sink adapters (parquet/csv/json/kafka-payload)
   streaming/pipeline.py   readStream wiring, foreachBatch, stream==batch parity
   oracle/                 DuckDB-dialect SQL mirrors used by __spark_entry__

@@ -1,12 +1,15 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched mapInPandas.
+"""Multimodal column plumbing: image/audio as opaque binary columns with
+typed metadata, processed via Arrow-batched mapInPandas.
 
-The container has no image/audio codecs, so the decode step is STUBBED
-(deterministic fake features derived from the bytes; a clearly-marked
-NotImplementedError guards the real path).  Everything Spark-side is real:
-schema, batch iteration, partition-preserving UDF shape — swap `_decode_stub`
-for a PIL/ffmpeg call on a cluster with the libs installed and nothing else
-changes.
+The decode path is real: genuine PNG/BMP/WAV container bytes are built
+and parsed by the pure-stdlib codecs in functions/codecs.py (zlib inflate,
+all five PNG scanline filters, RIFF chunk walking).  Pixel/sample content
+is a closed-form function of doc_id, so the DuckDB oracle computes the
+expected channel sums WITHOUT a decoder: any corruption anywhere in the
+encode->decode roundtrip (filtering, compression, chunk CRCs, row padding)
+shows up as a sum mismatch.  (A matched encoder+decoder bug pair would
+cancel here; tests/test_multimodal_real.py closes that hole with an
+independently hand-built PNG byte stream and spec vectors for Paeth.)
 
 At 100 TB: binary payloads dominate row size — keep them in their own
 parquet column (columnar pruning skips them unless projected), process with
@@ -21,91 +24,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-REAL_CODECS_AVAILABLE = False  # no PIL/opencv/ffmpeg in this container
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("payload_len", T.IntegerType()),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload_len", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def attach_fake_media(docs: DataFrame) -> DataFrame:
-    """Derive a deterministic opaque binary payload per document (md5 bytes
-    of the text) + typed metadata — the fixture stand-in for a real
-    image/audio column."""
-    return docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 2 == 0, F.lit("image/png"))
-        .otherwise(F.lit("audio/wav"))
-        .alias("media_type"),
-        F.unhex(F.md5("text")).alias("payload"),
-    ).withColumn("payload_len", F.length("payload").cast("int"))
-
-
-def _decode_stub(payload: bytes) -> tuple[int, int, list[float]]:
-    """Deterministic fake decode.  A heavyweight implementation would be
-    PIL.Image.open / soundfile.read; guarded because those libs are not in
-    this container.  The REAL sibling path (VERDICT r10 #2) is
-    attach_real_media + extract_features_real below: actual PNG/WAV
-    bytes through the pure-stdlib decoders in functions/codecs.py."""
-    if REAL_CODECS_AVAILABLE:  # pragma: no cover
-        raise NotImplementedError("wire PIL/ffmpeg decode here on a full cluster")
-    w = 1 + payload[0] % 64
-    h = 1 + payload[1] % 64
-    feat = [float(b) / 255.0 for b in payload[:8]]
-    return w, h, feat
-
-
-def extract_features(media: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction: Arrow batches in, Arrow batches out,
-    partition-preserving (no shuffle)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [_decode_stub(p) for p in pdf["payload"]]
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "payload_len": pdf["payload_len"],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "feature": [d[2] for d in decoded],
-                }
-            )
-            yield out
-
-    return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# REAL decode path (VERDICT r10 #2): genuine PNG/WAV containers built and
-# parsed by the pure-stdlib codecs in functions/codecs.py — zlib inflate,
-# all five PNG scanline filters, RIFF chunk walking.  Pixel/sample content
-# is a closed-form function of doc_id, so the DuckDB oracle can compute the
-# expected channel sums WITHOUT a decoder: any corruption anywhere in the
-# encode->decode roundtrip (filtering, compression, chunk CRCs, row
-# padding) shows up as a sum mismatch.  (A matched encoder+decoder bug pair
-# would cancel here; tests/test_multimodal_real.py closes that hole with an
-# independently hand-built PNG byte stream and spec vectors for Paeth.)
 
 REAL_MEDIA_SCHEMA = T.StructType(
     [
@@ -284,10 +203,8 @@ def resize_real(media: DataFrame, factor: int = 2) -> DataFrame:
     (nearest-neighbor subsample — rows y*factor, cols x*factor), and return
     the resized dims + per-channel integer sums; WAV payloads decimate to
     every `factor`-th frame (n_frames', sum|s|, peak|s| over kept frames,
-    signed sum).  Unlike multimodal_resize_plan (dims-only planning), this
-    lane touches actual pixels — the decode -> transform -> feature shape a
-    training-data image pipeline runs, minus only the PIL/ffmpeg codecs
-    this container lacks.  Features stay integers (FLOATS.md discipline);
+    signed sum).  This lane touches actual pixels — the decode ->
+    transform -> feature shape a training-data image pipeline runs.  Features stay integers (FLOATS.md discipline);
     the oracle recomputes them closed-form from the deterministic content.
     Scale: per-payload Python inside Arrow batches, partition-local, no
     shuffle added beyond the mapInPandas exchange."""
@@ -358,73 +275,3 @@ def resize_real(media: DataFrame, factor: int = 2) -> DataFrame:
             )
 
     return media.mapInPandas(run, RESIZE_REAL_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_feat", T.DoubleType()),
-    ]
-)
-
-
-def _frame_count_stub(payload: bytes) -> int:
-    """Deterministic fake frame count (real path: ffprobe/cv2 frame count)."""
-    if REAL_CODECS_AVAILABLE:  # pragma: no cover
-        raise NotImplementedError("wire ffprobe frame counting here")
-    return 1 + payload[2] % 60
-
-
-def sample_frames(media: DataFrame, every_n: int = 5) -> DataFrame:
-    """Frame sampling plumbing: one input row fans out to one row per
-    sampled frame (indices 0, every_n, 2*every_n, ... < n_frames) — the
-    REAL batch shape of video frame extraction (mapInPandas yielding more
-    rows than it consumes), with the codec stubbed deterministically.
-    Partition-preserving: a row's frames stay in its partition, so a
-    downstream per-frame model UDF needs no shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, totals, idxs, feats = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = _frame_count_stub(payload)
-                for i in range(0, n, every_n):
-                    ids.append(doc_id)
-                    totals.append(n)
-                    idxs.append(i)
-                    feats.append(round(payload[(i * 3) % 16] / 255.0, 6))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_frames": pd.Series(totals, dtype="int32"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_feat": pd.Series(feats, dtype="float64"),
-                }
-            )
-
-    return media.mapInPandas(run, FRAME_SCHEMA)
-
-
-def resize_plan(feats: DataFrame, max_side: int = 32) -> DataFrame:
-    """Aspect-preserving resize PLAN from decoded dims: integer-only math
-    (target = side * max_side // long_side) so every engine lands on the
-    same pixel dims — no float rounding at decision boundaries.  Pure
-    Catalyst; the actual pixel resample belongs in the stubbed decode."""
-    w, h = F.col("width"), F.col("height")
-    long_side = F.greatest(w, h)
-    needs = long_side > F.lit(max_side)
-
-    def target(side: F.Column) -> F.Column:
-        scaled = F.floor((side * max_side).cast("long") / long_side).cast("int")
-        return F.when(needs, F.greatest(F.lit(1), scaled)).otherwise(side)
-
-    return feats.select(
-        "doc_id",
-        "width",
-        "height",
-        target(w).alias("target_w"),
-        target(h).alias("target_h"),
-        needs.alias("scaled"),
-    )

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>): brute-force
 cosine top-k as the exactness baseline, sign-random-projection LSH and
-label-partitioned IVF as the scale paths.
+k-means IVF as the scale paths.
 
 Scale notes:
   * brute-force is O(Q x N) — fine for small Q (re-rank stage), never the
@@ -8,8 +8,8 @@ Scale notes:
     JVM-side, no Python.
   * SRP-LSH buckets by the sign pattern of the first P dimensions; the join
     is bucket-local.  At scale P tunes bucket size ~ N / 2^P.
-  * IVF uses a coarse-quantizer cell id (here the fixture's `label` column);
-    probes only the query's cell.
+  * IVF uses a trained k-means coarse quantizer; each query probes its
+    nearest cells.
   * embedding-cosine near-dup pairs: bucket-joinable the same way; here
     thresholded pairs for the dedup suite.
 """
@@ -621,13 +621,13 @@ def ann_ivf_kmeans(
     dim: int = SRP_DIM,
     probes: int = KMEANS_PROBES,
 ) -> DataFrame:
-    """IVF ANN over a REAL trained coarse quantizer (kmeans_fit), not the
-    fixture label: each query probes its `probes` nearest cells (standard
+    """IVF ANN over a trained coarse quantizer (kmeans_fit): each query
+    probes its `probes` nearest cells (standard
     IVF nprobe — recall rises with probes while candidates stay bounded by
     probes/n_cells of N), exact cosine re-rank inside.  `cell` in the
     output is the probed cell a neighbor was found in; each neighbor lives
-    in exactly one cell so no candidate dedup is needed.  Same output
-    contract as ann_ivf_label (query_id, cell, neighbor_id, cos, rank)."""
+    in exactly one cell so no candidate dedup is needed.  Output:
+    (query_id, cell, neighbor_id, cos, rank)."""
     from pyspark.sql import Window
 
     cells, cents = kmeans_fit(emb, n_cells, iters, dim)
@@ -1200,38 +1200,6 @@ def ann_ivf_pq(
         .filter(F.col("rank") <= k)
         .select("query_id", "cell", "neighbor_id", "est_micro",
                 F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def ann_ivf_label(emb: DataFrame, n_queries: int, k: int) -> DataFrame:
-    """DEPRECATED BASELINE — use `ann_ivf_kmeans` (the trained coarse
-    quantizer) for any real serving path.  This variant uses the fixture
-    `label` column as the coarse cell (probe the query's own cell only,
-    exact re-rank inside); the fixture labels are uncorrelated with
-    nearest-neighbor structure (label agreement 7%, RECALL.md), so recall
-    is ~0.10 — retained ONLY as the comparison row that the trained
-    k-means quantizer (recall 0.49 at 2 probes) is measured against."""
-    from pyspark.sql import Window
-
-    base = _with_vec(emb)
-    q = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"), "label"
-    )
-    c = base.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("cv"), "label"
-    )
-    scored = (
-        q.join(c, "label")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine(F.col("qv"), F.col("cv")), 4))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("label").alias("cell"), "neighbor_id", "cos", "rank")
     )
 
 

@@ -30,25 +30,10 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def slug_roots() -> dict[str, frozenset[str]]:
-    """Per-slug hash-basis root modules for srcstate: the module DEFINING
-    the query callable plus the module(s) REGISTERING the query and its
-    oracle (they differ when extras_q re-registers dedup_q/similarity_q
-    callables or composes their oracle text)."""
-    roots: dict[str, set[str]] = {}
-    for mod_name in _MODULES:
-        try:
-            mod = importlib.import_module(f"airstrik_py_spark.registry.{mod_name}")
-        except ModuleNotFoundError:
-            continue
-        for slug, fn in getattr(mod, "QUERIES", {}).items():
-            roots.setdefault(slug, set()).update(
-                {fn.__module__, f"airstrik_py_spark.registry.{mod_name}"}
-            )
-        for slug in getattr(mod, "ORACLES", {}):
-            roots.setdefault(slug, set()).add(
-                f"airstrik_py_spark.registry.{mod_name}"
-            )
-    return {slug: frozenset(r) for slug, r in roots.items()}
+    """Per-slug hash-basis root for srcstate: the one registry module that
+    defines the slug's query callable and registers it and its oracle."""
+    queries, _ = collect()
+    return {slug: frozenset({fn.__module__}) for slug, fn in queries.items()}
 
 
 def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
@@ -58,10 +43,7 @@ def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
     queries: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}
     for mod_name in _MODULES:
-        try:
-            mod = importlib.import_module(f"airstrik_py_spark.registry.{mod_name}")
-        except ModuleNotFoundError:
-            continue
+        mod = importlib.import_module(f"airstrik_py_spark.registry.{mod_name}")
         mod_queries = getattr(mod, "QUERIES", {})
         dupes = set(mod_queries) & set(queries)
         if dupes:

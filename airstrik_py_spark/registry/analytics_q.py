@@ -2,9 +2,8 @@
 engagement analytics (acquisition split, bounce rate), containment and
 winnowing dedup, DSIR importance weighting, and hard-triplet mining.
 
-Newest slugs carry zero driver-green rows, so the rotation in
-registry/__init__.py walks them into the driver's correctness window
-automatically; the local 3-SF sweep covers them immediately."""
+This is the last module in registry._MODULES, so these slugs enumerate
+last in queries(); the local 3-SF sweep (tools/check.py) covers them."""
 
 from __future__ import annotations
 

@@ -224,7 +224,7 @@ QUERIES = {
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
     "embedding_cosine_banded_candidates": q_embedding_cosine_banded_candidates,
     "dedup_embedding_cosine_hi": q_dedup_embedding_cosine_hi,
-    # dedup_clusters registers via extras_q (round-2 tail block)
+    "dedup_clusters": q_dedup_clusters,
 }
 
 ORACLES = {

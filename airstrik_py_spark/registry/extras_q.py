@@ -1,22 +1,5 @@
-"""Tail block of the registry enumeration.
-
-The driver records correctness rows in `queries()` insertion order and may
-truncate the tail under its verify budget (round 1 recorded exactly the
-first 50 of 52 registered slugs).  This module therefore registers, LAST:
-
-  1. the round-2 additions (newest, never had a driver row — losing one is
-     not a regression), most valuable first, and
-  2. the two cheapest-to-lose round-1 slugs: `ann_ivf_label` (the
-     fixture-label quantizer, superseded by the trained-k-means variant
-     registered above it) and `ddl_drop_reset` (whose row is rows-only /
-     `no_oracle` anyway).
-
-Round-1 callables and oracles live in their home modules (text_q / dedup_q /
-similarity_q / sinks_q) — for those this module only controls enumeration
-order and `collect()` merges each home module's ORACLES.  Slugs born in
-round 2 with no earlier home (the bucketed co-location demo) live here
-directly.
-"""
+"""Registry slugs whose callables and oracles have no other home module:
+events, star-schema, layout, corpus-release and text-signal lanes."""
 
 from __future__ import annotations
 
@@ -30,39 +13,6 @@ from airstrik_py_spark.oracle.exprs import OBS_CTE
 from airstrik_py_spark.session import pin_session
 from airstrik_py_spark.sources.tables import load_table, observations
 
-from airstrik_py_spark.registry.dedup_q import q_dedup_clusters
-from airstrik_py_spark.registry.similarity_q import (
-    q_ann_ivf_kmeans,
-    q_embedding_pca_power,
-    q_ann_ivf_label,
-    q_dedup_semantic,
-    q_embedding_dim_stats,
-    q_ann_ivf_pq,
-    q_ann_pq_adc,
-    q_embedding_label_centroids,
-    q_pq_codes,
-    q_knn_graph_bucketed,
-)
-from airstrik_py_spark.registry.sinks_q import q_ddl_drop_reset
-from airstrik_py_spark.registry.text_q import (
-    q_chunk_sliding,
-    q_corpus_stats_rollup,
-    q_corpus_vocab_topk,
-    q_doc_length_histogram,
-    q_lm_perplexity_buckets,
-    q_select_quality_topk,
-    q_tfidf_topk,
-    q_multimodal_framesample,
-    q_multimodal_resize_plan,
-    q_pack_concat_chunks,
-    q_pack_greedy_bins,
-    q_pipeline_corpus_manifest,
-    q_sample_domain_balance,
-    q_split_train_eval,
-    q_text_lm_score,
-    q_text_quality_gates,
-    q_text_repetition,
-)
 
 def q_join_bucketed_coloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed co-location end-to-end: write observations and sessionized
@@ -1140,17 +1090,6 @@ SELECT doc_id,
        CAST(sum(term_micro) AS BIGINT) AS entropy_micro
 FROM j GROUP BY doc_id
 """,
-    # ddl_drop_reset's lifecycle outcome is deterministic (create 3 temp
-    # views -> reset-style drop-all -> verify gone), so the oracle is the
-    # static expected catalog state — this turns the one historical
-    # `err: no_oracle` row into a hash-verifiable one (VERDICT r3 #3).
-    "ddl_drop_reset": """
-SELECT 'airstrik_ddl_trips' AS object, true AS created, true AS verified_gone
-UNION ALL
-SELECT 'airstrik_ddl_decimated', true, true
-UNION ALL
-SELECT 'airstrik_ddl_stats', true, true
-""",
     "layout_zorder": _zorder_oracle(),
     "dup_ngram_coverage": """
 WITH dwords AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -1659,41 +1598,13 @@ JOIN (SELECT hex, count(DISTINCT session_id) AS n_trips FROM sess GROUP BY hex) 
 }
 
 QUERIES = {
-    "dedup_clusters": q_dedup_clusters,
-    "ann_ivf_kmeans": q_ann_ivf_kmeans,
-    "text_quality_gates": q_text_quality_gates,
-    "corpus_stats_rollup": q_corpus_stats_rollup,
-    "split_train_eval": q_split_train_eval,
-    "multimodal_framesample": q_multimodal_framesample,
-    "multimodal_resize_plan": q_multimodal_resize_plan,
-    "corpus_vocab_topk": q_corpus_vocab_topk,
-    "embedding_label_centroids": q_embedding_label_centroids,
     "join_bucketed_coloc": q_join_bucketed_coloc,
     "eval_contamination": q_eval_contamination,
-    # round-3 additions (same most-valuable-first rule)
-    "pipeline_corpus_manifest": q_pipeline_corpus_manifest,
-    "knn_graph_bucketed": q_knn_graph_bucketed,
-    "dedup_semantic": q_dedup_semantic,
-    "text_lm_score": q_text_lm_score,
-    "pack_concat_chunks": q_pack_concat_chunks,
-    "pack_greedy_bins": q_pack_greedy_bins,
     "layout_zorder": q_layout_zorder,
-    "doc_length_histogram": q_doc_length_histogram,
-    "tfidf_topk": q_tfidf_topk,
-    "chunk_sliding": q_chunk_sliding,
-    "select_quality_topk": q_select_quality_topk,
-    "lm_perplexity_buckets": q_lm_perplexity_buckets,
-    "embedding_dim_stats": q_embedding_dim_stats,
-    "pq_codes": q_pq_codes,
-    "ann_pq_adc": q_ann_pq_adc,
-    "ann_ivf_pq": q_ann_ivf_pq,
     "events_retention": q_events_retention,
     "events_funnel": q_events_funnel,
     "events_props_extract": q_events_props_extract,
     "events_range_join": q_events_range_join,
-    "text_repetition": q_text_repetition,
-    "sample_domain_balance": q_sample_domain_balance,
-    # round-4 additions (same most-valuable-first rule)
     "dup_ngram_coverage": q_dup_ngram_coverage,
     "text_pii_redact": q_text_pii_redact,
     "events_sessionize": q_events_sessionize,
@@ -1702,7 +1613,6 @@ QUERIES = {
     "layout_shuffle_bucketed": q_layout_shuffle_bucketed,
     "dup_span_tokens": q_dup_span_tokens,
     "bpe_pair_topk": q_bpe_pair_topk,
-    "embedding_pca_power": q_embedding_pca_power,
     "vocab_oov_coverage": q_vocab_oov_coverage,
     "quality_lr_score": q_quality_lr_score,
     "events_anomaly_mad": q_events_anomaly_mad,
@@ -1722,8 +1632,6 @@ QUERIES = {
     "star_forecast_delta": q_star_forecast_delta,
     "sink_orc_roundtrip": q_sink_orc_roundtrip,
     "events_timeseries_gapfill": q_events_timeseries_gapfill,
-    "ann_ivf_label": q_ann_ivf_label,
-    "ddl_drop_reset": q_ddl_drop_reset,
     "events_attribution_lastclick": q_events_attribution_lastclick,
     "text_char_entropy": q_text_char_entropy,
     "star_order_priority_semijoin": q_star_order_priority_semijoin,
@@ -1739,13 +1647,14 @@ QUERIES = {
     "events_rfm_segments": q_events_rfm_segments,
     "events_type_pivot": q_events_type_pivot,
 }
-# (oracles for the re-registered round-1 slugs merge from their home
-# modules; ORACLES above holds only the extras-native entries)
 
-from airstrik_py_spark.registry import text_q as _text_q  # noqa: E402
 
-ORACLES["text_langid_confusion"] = f"""
-WITH base AS ({_text_q.ORACLES["text_langid"]}),
+def _langid_confusion_oracle() -> str:
+    """Composes text_q's text_langid oracle."""
+    from airstrik_py_spark.registry import text_q
+
+    return f"""
+WITH base AS ({text_q.ORACLES["text_langid"]}),
 per AS (SELECT tagged_lang, guessed_lang, CAST(count(*) AS BIGINT) AS n_docs
         FROM base GROUP BY tagged_lang, guessed_lang),
 tot AS (SELECT tagged_lang, CAST(sum(n_docs) AS BIGINT) AS tag_total
@@ -1754,6 +1663,9 @@ SELECT per.tagged_lang, guessed_lang, n_docs, tag_total,
        round(CAST(n_docs AS DOUBLE) / CAST(tag_total AS DOUBLE), 6) AS share
 FROM per JOIN tot USING (tagged_lang)
 """
+
+
+ORACLES["text_langid_confusion"] = _langid_confusion_oracle()
 
 ORACLES["events_rfm_segments"] = """
 WITH d AS (SELECT user_id, CAST(ts AS DATE) AS day,
@@ -1786,10 +1698,13 @@ SELECT COALESCE(old.doc_id, new.doc_id) AS doc_id, old_digest, new_digest,
 FROM old FULL OUTER JOIN new ON old.doc_id = new.doc_id
 """
 
-from airstrik_py_spark.registry import dedup_q as _dedup_q  # noqa: E402
 
-ORACLES["dedup_best_quality_canonical"] = f"""
-WITH clusters AS ({_dedup_q.ORACLES["dedup_clusters"]}),
+def _best_quality_oracle() -> str:
+    """Composes dedup_q's dedup_clusters oracle."""
+    from airstrik_py_spark.registry import dedup_q
+
+    return f"""
+WITH clusters AS ({dedup_q.ORACLES["dedup_clusters"]}),
 j AS (SELECT c.cluster_id, c.doc_id, d.n_chars
       FROM clusters c JOIN documents d USING (doc_id))
 SELECT cluster_id,
@@ -1800,3 +1715,6 @@ SELECT cluster_id,
          AS best_n_chars
 FROM j GROUP BY cluster_id
 """
+
+
+ORACLES["dedup_best_quality_canonical"] = _best_quality_oracle()

@@ -1,10 +1,8 @@
 """Round-3 scale-family slugs: weighted priority sampling, count-min
 heavy hitters, delta-style corpus upsert, and kNN-graph PageRank.
 
-These register after every earlier family (newest slugs have zero
-driver-green rows, so the rotation in registry/__init__.py will walk them
-into the driver's ~50-row correctness window in later rounds; the local
-sweep covers them immediately).
+These enumerate after every module but analytics_q in queries()
+(registry._MODULES order); the local sweep (tools/check.py) covers them.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """t2 queries for similarity search over `embeddings`: brute-force cosine
-top-k (baseline), SRP-LSH bucketed, and label-cell IVF (scale paths)."""
+top-k (baseline), SRP-LSH bucketed, and k-means IVF (scale paths)."""
 
 from __future__ import annotations
 
@@ -98,11 +98,6 @@ def q_ann_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_lsh_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_session(spark)
     return SIM.ann_srp_lsh(load_table(spark, sf_dir, "embeddings"), N_QUERIES, TOP_K)
-
-
-def q_ann_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pin_session(spark)
-    return SIM.ann_ivf_label(load_table(spark, sf_dir, "embeddings"), N_QUERIES, TOP_K)
 
 
 def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -426,8 +421,15 @@ QUERIES = {
     "embedding_quantize_int8": q_embedding_quantize_int8,
     "ann_rrf_fusion": q_ann_rrf_fusion,
     "embedding_truncate_recall": q_embedding_truncate_recall,
-    # ann_ivf_label (fixture-label quantizer, superseded by the trained
-    # k-means variant) and ann_ivf_kmeans register via extras_q
+    "ann_ivf_kmeans": q_ann_ivf_kmeans,
+    "embedding_label_centroids": q_embedding_label_centroids,
+    "knn_graph_bucketed": q_knn_graph_bucketed,
+    "dedup_semantic": q_dedup_semantic,
+    "embedding_dim_stats": q_embedding_dim_stats,
+    "pq_codes": q_pq_codes,
+    "ann_pq_adc": q_ann_pq_adc,
+    "ann_ivf_pq": q_ann_ivf_pq,
+    "embedding_pca_power": q_embedding_pca_power,
 }
 
 # truncated-prefix cosine: same formula as _COS over v[1:TRUNC_DIM]
@@ -547,14 +549,6 @@ probes AS (
 SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_COS} AS cos,
        CAST(row_number() OVER (PARTITION BY q.vec_id ORDER BY {_COS} DESC, c.vec_id) AS INTEGER) AS rank
 FROM probes q JOIN sigd c ON q.bucket = c.sig AND q.vec_id <> c.vec_id
-WHERE q.vec_id < {N_QUERIES}
-QUALIFY rank <= {TOP_K}
-""",
-    "ann_ivf_label": f"""
-WITH {_E}
-SELECT q.vec_id AS query_id, q.label AS cell, c.vec_id AS neighbor_id, {_COS} AS cos,
-       CAST(row_number() OVER (PARTITION BY q.vec_id ORDER BY {_COS} DESC, c.vec_id) AS INTEGER) AS rank
-FROM e q JOIN e c ON q.label = c.label AND q.vec_id <> c.vec_id
 WHERE q.vec_id < {N_QUERIES}
 QUALIFY rank <= {TOP_K}
 """,

@@ -4,12 +4,11 @@
 describes the current code: the row is fresh when the slug's source hash at
 the commit that produced it equals the slug's hash in the worktree.
 
-Hash basis per slug: the registry module that defines the query callable,
-the module(s) that register it and its oracle SQL (they can differ —
-extras_q re-registers dedup_q/similarity_q callables and composes their
-oracle text), plus the transitive closure of first-party
-(``airstrik_py_spark.*``) imports of all of those — parsed TEXTUALLY so
-historical git trees never need importing.  Module-level granularity is
+Hash basis per slug: the one registry module that defines the query
+callable and registers it and its oracle SQL, plus the transitive closure
+of its first-party (``airstrik_py_spark.*``) imports — an oracle composed
+from another registry module's oracle pulls that module in through its
+import — parsed TEXTUALLY so historical git trees never need importing.  Module-level granularity is
 deliberately conservative: an edit anywhere in a module marks every slug
 whose closure contains it stale, which costs one re-measurement, never a
 missed one.

@@ -8,12 +8,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airstrik_py_spark.operators.corpus import PACK_SALT, PACK_SEQ_LEN, SAMPLE_SALT
-from airstrik_py_spark.operators.multimodal import (
-    attach_fake_media,
-    extract_features,
-    resize_plan,
-    sample_frames,
-)
 from airstrik_py_spark.session import pin_session
 from airstrik_py_spark.sources.tables import load_table
 
@@ -85,17 +79,6 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, x: (acc * 31 + x) % FNV_MOD,
     )
     return d.select("doc_id", fp.alias("fingerprint"))
-
-
-def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing end-to-end: attach an opaque binary payload,
-    extract features via a REAL mapInPandas (Arrow-batched) with a stubbed
-    decoder, return the typed metadata (the oracle recomputes the stub's
-    byte math in SQL)."""
-    pin_session(spark)
-    media = attach_fake_media(load_table(spark, sf_dir, "documents"))
-    feats = extract_features(media)
-    return feats.select("doc_id", "media_type", "payload_len", "width", "height")
 
 
 def q_multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,23 +283,6 @@ def q_corpus_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(VOCAB_TOP_K)
 
 
-def q_multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-style frame sampling: mapInPandas fans each media row out to
-    one row per sampled frame (stubbed deterministic codec; the oracle
-    recomputes the stub's byte math with a range() unnest)."""
-    pin_session(spark)
-    media = attach_fake_media(load_table(spark, sf_dir, "documents"))
-    return sample_frames(media)
-
-
-def q_multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving resize plan over decoded dims — integer-only
-    target math so engines agree exactly."""
-    pin_session(spark)
-    feats = extract_features(attach_fake_media(load_table(spark, sf_dir, "documents")))
-    return resize_plan(feats.select("doc_id", "width", "height"))
-
-
 def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition signals (duplicate-word / top-word / top-2-gram
     shares) — operators/corpus.py::repetition_signals over documents."""
@@ -459,30 +425,27 @@ QUERIES = {
     "text_quality": q_text_quality,
     "text_tokens": q_text_tokens,
     "text_fingerprint": q_text_fingerprint,
-    "multimodal_metadata": q_multimodal_metadata,
     "multimodal_decode_real": q_multimodal_decode_real,
     "multimodal_resize_real": q_multimodal_resize_real,
-    # the round-2 additions (quality gates, rollup, split, framesample,
-    # resize plan) register via extras_q so the round-1 verified set keeps
-    # the front of the driver's enumeration
+    "text_quality_gates": q_text_quality_gates,
+    "corpus_stats_rollup": q_corpus_stats_rollup,
+    "split_train_eval": q_split_train_eval,
+    "corpus_vocab_topk": q_corpus_vocab_topk,
+    "pipeline_corpus_manifest": q_pipeline_corpus_manifest,
+    "text_lm_score": q_text_lm_score,
+    "pack_concat_chunks": q_pack_concat_chunks,
+    "pack_greedy_bins": q_pack_greedy_bins,
+    "doc_length_histogram": q_doc_length_histogram,
+    "tfidf_topk": q_tfidf_topk,
+    "chunk_sliding": q_chunk_sliding,
+    "select_quality_topk": q_select_quality_topk,
+    "lm_perplexity_buckets": q_lm_perplexity_buckets,
+    "text_repetition": q_text_repetition,
+    "sample_domain_balance": q_sample_domain_balance,
 }
 
 # hex nibble -> int via position in the digit string (1-indexed strpos)
 _NIB = "(strpos('0123456789abcdef', {c}) - 1)"
-
-
-def _md5_byte(k: str) -> str:
-    """Byte k (0-based, possibly an expression) of md5(text) as an int —
-    two hex nibbles at positions 2k+1, 2k+2."""
-    hi = _NIB.format(c=f"substr(h, 2 * ({k}) + 1, 1)")
-    lo = _NIB.format(c=f"substr(h, 2 * ({k}) + 2, 1)")
-    return f"({hi} * 16 + {lo})"
-_BYTE0 = (
-    _NIB.format(c="substr(md5(text), 1, 1)") + " * 16 + " + _NIB.format(c="substr(md5(text), 2, 1)")
-)
-_BYTE1 = (
-    _NIB.format(c="substr(md5(text), 3, 1)") + " * 16 + " + _NIB.format(c="substr(md5(text), 4, 1)")
-)
 
 # Quality-gate CTEs shared by text_quality_gates and the composed
 # pipeline_corpus_manifest — ONE SQL definition, like _gate_exprs Spark-side.
@@ -594,14 +557,6 @@ SELECT doc_id,
             THEN 'train' ELSE 'eval' END AS split
 FROM documents
 """,
-    "multimodal_metadata": f"""
-SELECT doc_id,
-       CASE WHEN doc_id % 2 = 0 THEN 'image/png' ELSE 'audio/wav' END AS media_type,
-       CAST(octet_length(unhex(md5(text))) AS INTEGER) AS payload_len,
-       CAST(1 + ({_BYTE0}) % 64 AS INTEGER) AS width,
-       CAST(1 + ({_BYTE1}) % 64 AS INTEGER) AS height
-FROM documents
-""",
     # Closed-form mirror of the REAL decode lane: the engine builds and
     # parses genuine PNG/WAV bytes; the oracle computes the same channel
     # sums directly from the deterministic content formula — no decoder in
@@ -679,39 +634,12 @@ SELECT doc_id, 'wav' AS container,
        CAST(f1 AS BIGINT) AS f1, CAST(f2 AS BIGINT) AS f2, CAST(f3 AS BIGINT) AS f3
 FROM asums
 """,
-    "multimodal_framesample": f"""
-WITH m AS (SELECT doc_id, md5(text) AS h FROM documents),
-fc AS (SELECT doc_id, h, 1 + {_md5_byte("2")} % 60 AS n_frames FROM m),
-fr AS (SELECT doc_id, h, n_frames,
-              unnest(range(0, n_frames, 5)) AS frame_idx
-       FROM fc)
-SELECT doc_id,
-       CAST(n_frames AS INTEGER) AS n_frames,
-       CAST(frame_idx AS INTEGER) AS frame_idx,
-       round({_md5_byte("(frame_idx * 3) % 16")} / 255.0, 6) AS frame_feat
-FROM fr
-""",
     "corpus_vocab_topk": f"""
 WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
 SELECT token, count(*) AS n_occurrences, count(DISTINCT doc_id) AS n_docs
 FROM tok GROUP BY token
 ORDER BY n_occurrences DESC, token ASC
 LIMIT {VOCAB_TOP_K}
-""",
-    "multimodal_resize_plan": f"""
-WITH m AS (SELECT doc_id, md5(text) AS h FROM documents),
-d AS (SELECT doc_id,
-             1 + {_md5_byte("0")} % 64 AS w,
-             1 + {_md5_byte("1")} % 64 AS h2
-      FROM m)
-SELECT doc_id,
-       CAST(w AS INTEGER) AS width, CAST(h2 AS INTEGER) AS height,
-       CAST(CASE WHEN greatest(w, h2) > 32
-                 THEN greatest(1, (w * 32) // greatest(w, h2)) ELSE w END AS INTEGER) AS target_w,
-       CAST(CASE WHEN greatest(w, h2) > 32
-                 THEN greatest(1, (h2 * 32) // greatest(w, h2)) ELSE h2 END AS INTEGER) AS target_h,
-       greatest(w, h2) > 32 AS scaled
-FROM d
 """,
     "text_repetition": """
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -41,7 +42,7 @@ def test_lint_clean_on_all_oracles():
         [sys.executable, "tools/lint_oracles.py", SF_DIR],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=Path(__file__).resolve().parents[1],
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
     assert "0 flagged" in proc.stdout

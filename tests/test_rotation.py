@@ -13,6 +13,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 from airstrik_py_spark.registry import _MODULES, collect, slug_roots
 from airstrik_py_spark.registry import srcstate
 
@@ -48,6 +50,30 @@ def test_entry_import_does_not_load_srcstate():
     assert out.strip().splitlines()[-1] == "False"
 
 
+def test_collect_raises_on_missing_registry_module(monkeypatch):
+    """A registry module that fails to import must fail collect(), not
+    silently drop its slugs from queries()."""
+    import airstrik_py_spark.registry as registry
+
+    monkeypatch.setattr(registry, "_MODULES", (*_MODULES, "no_such_q"))
+    with pytest.raises(ModuleNotFoundError):
+        registry.collect()
+
+
+def test_each_slug_lives_in_one_module():
+    """One home per slug: the registry module that lists a slug in QUERIES
+    also defines its callable and holds its oracle."""
+    strays = []
+    for mod_name in _MODULES:
+        mod = importlib.import_module(f"airstrik_py_spark.registry.{mod_name}")
+        for slug, fn in mod.QUERIES.items():
+            if fn.__module__ != mod.__name__ or slug not in mod.ORACLES:
+                strays.append((mod_name, slug))
+    assert strays == []
+    roots = slug_roots()
+    assert all(len(r) == 1 for r in roots.values())
+
+
 def test_every_slug_has_oracle_and_callable():
     queries, oracles = collect()
     assert set(oracles) <= set(queries)
@@ -70,13 +96,13 @@ def test_srcstate_closure_covers_operator_rewrites():
     roots = slug_roots()
     files = srcstate.dep_closure(sorted(roots["embedding_cosine_banded_candidates"]))
     assert "airstrik_py_spark/operators/similarity.py" in files
-    # oracle composed in a different module than the callable definition:
-    # extras_q re-registers dedup_q's q_dedup_clusters
-    files2 = srcstate.dep_closure(sorted(roots["dedup_clusters"]))
+    # an oracle composed from another registry module's oracle: extras_q's
+    # dedup_best_quality_canonical wraps dedup_q's dedup_clusters oracle
+    files2 = srcstate.dep_closure(sorted(roots["dedup_best_quality_canonical"]))
     assert "airstrik_py_spark/registry/extras_q.py" in files2
     assert "airstrik_py_spark/registry/dedup_q.py" in files2
-    # rotation plumbing must NOT be in any closure (editing the rotation
-    # policy is not a semantic change to any slug)
+    # registry plumbing must NOT be in any closure (editing the enumeration
+    # order or the hashing is not a semantic change to any slug)
     assert "airstrik_py_spark/registry/__init__.py" not in files
     assert "airstrik_py_spark/registry/srcstate.py" not in files
 

@@ -1,5 +1,5 @@
-"""Sink writers, kafka record serialization, multimodal plumbing, REPL
-dispatch, decimation counter."""
+"""Sink writers, kafka record serialization, REPL dispatch, decimation
+counter."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from airstrik_py_spark.config import EngineConfig
 from airstrik_py_spark.operators import kinematics as K
 from airstrik_py_spark.operators import sessions as S
 from airstrik_py_spark.operators.decimation import decimate
-from airstrik_py_spark.operators.multimodal import attach_fake_media, extract_features
 from airstrik_py_spark.repl import Repl
 from airstrik_py_spark.sinks import kafka_records, write_csv, write_json, write_store
 from tests.conftest import obs_rows
@@ -258,16 +257,6 @@ def test_stats_and_decimated_document_golden(spark):
         "lon_value": -78.685,
         "lon_sec": 1705496097.878354,
     }
-
-
-def test_multimodal_extract_deterministic(spark):
-    docs = spark.createDataFrame([(0, "hello world"), (1, "spark")], "doc_id long, text string")
-    feats = extract_features(attach_fake_media(docs)).orderBy("doc_id").collect()
-    assert feats[0]["payload_len"] == 16  # md5 digest bytes
-    assert 1 <= feats[0]["width"] <= 64 and 1 <= feats[0]["height"] <= 64
-    assert len(feats[0]["feature"]) == 8
-    again = extract_features(attach_fake_media(docs)).orderBy("doc_id").collect()
-    assert feats == again  # stub is deterministic
 
 
 def test_repl_dispatch(spark, tmp_path):

@@ -40,37 +40,6 @@ def test_split_deterministic_and_roughly_75(spark):
     )
 
 
-def test_framesample_fanout_shape(spark):
-    from airstrik_py_spark.operators.multimodal import attach_fake_media, sample_frames
-    from airstrik_py_spark.sources.tables import load_table
-
-    media = attach_fake_media(load_table(spark, SF, "documents"))
-    frames = sample_frames(media, every_n=5).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    for doc_id, rows in by_doc.items():
-        n = rows[0]["n_frames"]
-        assert sorted(r["frame_idx"] for r in rows) == list(range(0, n, 5))
-        assert all(0.0 <= r["frame_feat"] <= 1.0 for r in rows)
-
-
-def test_resize_plan_preserves_aspect_and_bounds(spark):
-    from airstrik_py_spark.operators.multimodal import (
-        attach_fake_media,
-        extract_features,
-        resize_plan,
-    )
-    from airstrik_py_spark.sources.tables import load_table
-
-    feats = extract_features(attach_fake_media(load_table(spark, SF, "documents")))
-    for r in resize_plan(feats.select("doc_id", "width", "height")).collect():
-        assert 1 <= r["target_w"] <= 32 or not r["scaled"]
-        assert max(r["target_w"], r["target_h"]) <= max(r["width"], r["height"])
-        if r["scaled"]:
-            assert max(r["target_w"], r["target_h"]) == 32
-
-
 def test_eval_contamination_bounds_and_coverage(spark):
     from airstrik_py_spark.registry.extras_q import q_eval_contamination
 

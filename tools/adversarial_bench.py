@@ -23,8 +23,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -34,7 +36,7 @@ from airstrik_py_spark.registry.dedup_q import JACCARD_THRESHOLD  # noqa: E402
 from airstrik_py_spark.session import get_spark, pin_session  # noqa: E402
 from airstrik_py_spark.sources.tables import load_table  # noqa: E402
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(ROOT / "tools"))
 from gen_scale import PLANT_COSINES, planted_pairs  # noqa: E402
 
 UNCAPPED = 1 << 30

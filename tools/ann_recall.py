@@ -7,8 +7,10 @@ Writes RECALL.md.  Usage: python tools/ann_recall.py [sf_dir] [k]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -35,11 +37,9 @@ def main() -> None:
 
     brute = SIM.ann_bruteforce(emb, n_queries=n, k=k).cache()
     srp = SIM.ann_srp_lsh(emb, n_queries=n, k=k)
-    ivf = SIM.ann_ivf_label(emb, n_queries=n, k=k)
     ivf_km = SIM.ann_ivf_kmeans(emb, n_queries=n, k=k)
 
     r_srp = recall_vs_brute(srp, brute)
-    r_ivf = recall_vs_brute(ivf, brute)
     r_km = recall_vs_brute(ivf_km, brute)
     # RRF fusion of (exact, SRP): by construction recall can only improve
     # on SRP alone — the exact list re-injects what the buckets missed;
@@ -118,7 +118,7 @@ def main() -> None:
     n_probes = len(SIM.srp_probe_masks())
     probed = min(avg_bucket * n_probes, n)
 
-    with open("/root/repo/RECALL.md", "w") as f:
+    with open(ROOT / "RECALL.md", "w") as f:
         f.write(
             "# ANN recall vs exact brute force (tools/ann_recall.py)\n\n"
             f"sf_dir: {sf_dir}, N = {n} vectors, k = {k}, all vectors as queries.\n\n"
@@ -127,7 +127,6 @@ def main() -> None:
             f"| SRP-LSH ({SIM.SRP_BITS} bits, Hamming-{SIM.SRP_PROBE_HAMMING} "
             f"multi-probe, {n_probes} probes) | {r_srp:.3f} | "
             f"~{probed:.0f} (~{probed / n:.1%} of N) |\n"
-            f"| IVF (label cells) | {r_ivf:.3f} | one cell (~{1 / 10:.0%} of N) |\n"
             f"| RRF fusion (exact + SRP, c={SIM.RRF_C}) | {r_rrf:.3f} | "
             f"union of both lists (2k per query) |\n"
             f"| IVF (trained k-means, {SIM.KMEANS_CELLS} cells x "
@@ -188,7 +187,7 @@ def main() -> None:
             "if the corpus stops being synthetic.\n"
         )
     print(
-        f"recall@{k}: srp={r_srp:.3f} ivf={r_ivf:.3f} kmeans={r_km:.3f} "
+        f"recall@{k}: srp={r_srp:.3f} kmeans={r_km:.3f} "
         f"adc-vs-L2={r_adc:.3f} (N={n}); wrote RECALL.md"
     )
 

@@ -10,8 +10,10 @@ Usage: python tools/approx_error.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -153,7 +155,7 @@ def main() -> None:
         "",
     ]
 
-    with open("/root/repo/APPROX.md", "w") as f:
+    with open(ROOT / "APPROX.md", "w") as f:
         f.write("\n".join(lines))
     print("wrote APPROX.md")
 

@@ -22,8 +22,10 @@ import contextlib
 import io
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from airstrik_py_spark.session import get_spark  # noqa: E402
 
@@ -185,7 +187,7 @@ def main() -> None:
                 )
         rows.append((name, n_ex, bhj, smj, codegen, widest, " ".join(flags)))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write(
             "# Physical-plan audit (auto-generated by tools/audit_plans.py)\n\n"
             f"sf_dir: {sf_dir}.  Every query's STATIC plan (AQE disabled for\n"

@@ -26,10 +26,12 @@ import sys
 import threading
 import time
 from collections import Counter
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from airstrik_py_spark.session import get_spark  # noqa: E402
 from airstrik_py_spark.sources.tables import TABLES  # noqa: E402

@@ -9,8 +9,10 @@ Usage: python tools/datacard.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from airstrik_py_spark.session import get_spark  # noqa: E402
 
@@ -169,7 +171,7 @@ def main() -> None:
         )
     lines.append("")
 
-    with open("/root/repo/DATACARD.md", "w") as f:
+    with open(ROOT / "DATACARD.md", "w") as f:
         f.write("\n".join(lines))
     print(f"wrote DATACARD.md ({n_docs} docs, {len(hist)} length buckets)")
 

@@ -37,11 +37,13 @@ import math
 import re
 import sys
 from collections import Counter
+from pathlib import Path
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from airstrik_py_spark.sources.tables import TABLES  # noqa: E402
 

@@ -194,8 +194,8 @@ def build_ledger() -> str:
         "closing tree, resetting every slug's 10x evidence to the "
         "current round; (2) re-runs at sf10 every slug whose engine/"
         "oracle semantics actually changed that round, plus the oldest-"
-        "evidence sf10 cohort that fits the budget — the same rotation "
-        "rule the driver-window uses for correctness evidence.",
+        "evidence sf10 cohort that fits the budget (oldest evidence "
+        "first, so every slug's sf10 row is refreshed in turn).",
         END,
     ]
     return "\n".join(lines)

@@ -20,8 +20,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -100,7 +102,7 @@ def main() -> None:
     t_plain = best_of(3, plain_shuffle_join)
     t_salted = best_of(3, salted_join)
 
-    with open("/root/repo/SKEW.md", "w") as f:
+    with open(ROOT / "SKEW.md", "w") as f:
         f.write(
             "# SKEW — measured hot-key remedies (tools/skew_bench.py)\n\n"
             f"sf_dir: `{sf_dir}`, events replicated x{replicate} = {n} rows, "

@@ -36,8 +36,10 @@ import shutil
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -470,7 +472,7 @@ def main() -> None:
             "each other on the run's own hardware, not against prior runs.",
             "",
         ]
-        with open("/root/repo/STREAMBENCH.md", "w") as f:
+        with open(ROOT / "STREAMBENCH.md", "w") as f:
             f.write("\n".join(lines))
         print("wrote STREAMBENCH.md", file=sys.stderr)
     finally:
