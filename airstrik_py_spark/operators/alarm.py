@@ -13,11 +13,18 @@ the explode, so Catalyst never materializes steps for planes that can't
 simulate.  At 100 TB the unroll is embarrassingly
 parallel (partition-local; the step windows repartition on (hex, event_id)
 which is finer than hex — no skew possible).  `latest_fix` builds the
-per-plane state D1 reads, for the registered slugs and the live callback
-alike.
+per-plane state D1 reads.
+
+Each operator is a `build_*(cfg)` that builds its Column expressions once
+and returns a function that only applies them.  The registered slugs
+build per query; the live callback (streaming/pipeline.py::
+alarm_foreach_batch) builds once per stream, so a micro-batch pays a few
+py4j round trips per DataFrame call instead of a dozen per Column call.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,6 +36,10 @@ from airstrik_py_spark.operators import kinematics as K
 # Reference sentinel: min_radius when the zone is never entered
 # (airstrik.py:232 `min_radius = 100000000`).
 MIN_RADIUS_SENTINEL = 100000000.0
+
+# An operator with its Column expressions already built: it only applies
+# them to the frame it is given.
+Op = Callable[[DataFrame], DataFrame]
 
 
 def matched_filters(dist: Column, alt: Column, cfg: EngineConfig) -> Column:
@@ -46,7 +57,7 @@ def matched_filters(dist: Column, alt: Column, cfg: EngineConfig) -> Column:
     return F.concat_ws(",", *parts)
 
 
-def latest_fix(obs: DataFrame, cfg: EngineConfig) -> DataFrame:
+def build_latest_fix(cfg: EngineConfig) -> Op:
     """Latest fix per plane with kinematics attached (the reference's
     plane_history[-1] state, no consecutive-dedup so every event counts).
 
@@ -59,28 +70,44 @@ def latest_fix(obs: DataFrame, cfg: EngineConfig) -> DataFrame:
     w_desc = Window.partitionBy("hex").orderBy(
         F.col("ts_sec").desc(), F.col("event_id").desc()
     )
-    tail = obs.withColumn("_rn", F.row_number().over(w_desc)).filter(
-        F.col("_rn") <= cfg.lookback_rows + 1
-    )
-    kin = K.with_distance_home(K.with_calc_speed(K.with_calc_heading(tail), cfg), cfg)
-    return kin.filter("_rn = 1").drop("_rn")
+    rank = F.row_number().over(w_desc)
+    in_tail = F.col("_rn") <= cfg.lookback_rows + 1
+    kin = {
+        "calc_heading": K.calc_heading(),
+        "calc_speed": K.calc_speed(cfg),
+        "distance": K.distance_home(cfg),
+    }
+    top = F.col("_rn") == 1
+
+    def apply(obs: DataFrame) -> DataFrame:
+        return (
+            obs.withColumn("_rn", rank).filter(in_tail).withColumns(kin).filter(top).drop("_rn")
+        )
+
+    return apply
 
 
-def _spherical_geometry(sim: DataFrame, step_km: Column, cfg: EngineConfig) -> DataFrame:
+def latest_fix(obs: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """build_latest_fix applied to `obs`."""
+    return build_latest_fix(cfg)(obs)
+
+
+def _spherical_geometry(step_km: Column, cfg: EngineConfig) -> Op:
     """Step position by the spherical forward geodesic and zone distance by
     haversine — Column expressions, whole-stage codegen."""
-    sim = sim.withColumn("_slat", dest_lat_deg(F.col("lat"), F.col("_shdg"), step_km))
-    sim = sim.withColumn(
-        "_slon",
-        dest_lon_deg(F.col("lat"), F.col("lon"), F.col("_slat"), F.col("_shdg"), step_km),
-    )
-    return sim.withColumn(
-        "_sdist",
-        haversine_km(F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("_slat"), F.col("_slon")),
+    slat = dest_lat_deg(F.col("lat"), F.col("_shdg"), step_km)
+    slon = dest_lon_deg(F.col("lat"), F.col("lon"), F.col("_slat"), F.col("_shdg"), step_km)
+    sdist = haversine_km(
+        F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("_slat"), F.col("_slon")
     )
 
+    def apply(sim: DataFrame) -> DataFrame:
+        return sim.withColumn("_slat", slat).withColumn("_slon", slon).withColumn("_sdist", sdist)
 
-def _exact_geometry(sim: DataFrame, step_km: Column, cfg: EngineConfig) -> DataFrame:
+    return apply
+
+
+def _exact_geometry(step_km: Column, cfg: EngineConfig) -> Op:
     """Step position by the WGS-84 Karney direct problem and zone distance
     by the Karney inverse problem, both Arrow-batched pandas_udfs.  A
     pandas_udf sees every row, including the single t=0 row of a fix that
@@ -97,23 +124,25 @@ def _exact_geometry(sim: DataFrame, step_km: Column, cfg: EngineConfig) -> DataF
     dest = geodesic_dest_pandas_udf()(
         sim_only(F.col("lat")), sim_only(F.col("lon")), sim_only(F.col("_shdg")), sim_only(step_km)
     )
-    sim = (
-        sim.withColumn("_spt", dest)
-        .withColumn("_slat", F.col("_spt.lat"))
-        .withColumn("_slon", F.col("_spt.lon"))
-        .drop("_spt")
-    )
-    return sim.withColumn(
-        "_sdist",
-        geodesic_km_pandas_udf()(
-            F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("_slat"), F.col("_slon")
-        ),
+    point = {"_slat": F.col("_spt.lat"), "_slon": F.col("_spt.lon")}
+    sdist = geodesic_km_pandas_udf()(
+        F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("_slat"), F.col("_slon")
     )
 
+    def apply(sim: DataFrame) -> DataFrame:
+        return (
+            sim.withColumn("_spt", dest)
+            .withColumns(point)
+            .drop("_spt")
+            .withColumn("_sdist", sdist)
+        )
 
-def _dead_reckoning_steps(
-    df: DataFrame, cfg: EngineConfig, heading: Column, can_sim: Column, geometry
-) -> DataFrame:
+    return apply
+
+
+def _build_dead_reckoning_steps(
+    cfg: EngineConfig, heading: Column, can_sim: Column, geometry
+) -> Op:
     """D1 as ONE explode+window pass; `geometry` (step position + zone
     distance) is the only part that varies.
 
@@ -134,20 +163,14 @@ def _dead_reckoning_steps(
     `t < first_break` suffices.
     """
     horizon = F.lit(int(cfg.think_ahead))
-    sim = (
-        df.withColumn("can_sim", can_sim)
-        .withColumn("_shdg", heading)
-        .withColumn(
-            "_t",
-            F.explode(
-                F.when(F.col("can_sim"), F.sequence(F.lit(0), horizon - 1)).otherwise(
-                    F.array(F.lit(0))
-                )
-            ),
+    setup = {"can_sim": can_sim, "_shdg": heading}
+    steps = F.explode(
+        F.when(F.col("can_sim"), F.sequence(F.lit(0), horizon - 1)).otherwise(
+            F.array(F.lit(0))
         )
     )
     step_km = (F.col("calc_speed") / 3600.0) * F.col("_t")
-    sim = geometry(sim, step_km, cfg)
+    geo = geometry(step_km, cfg)
     in_zone = F.col("can_sim") & (F.col("_sdist") < F.lit(cfg.most_generous_dist_km))
     oob = (F.abs(F.col("_slat")) > 90.0) | (F.abs(F.col("_slon")) > 90.0)
 
@@ -157,50 +180,53 @@ def _dead_reckoning_steps(
 
     prev_zone_dist = F.last(F.when(in_zone, F.col("_sdist")), ignorenulls=True).over(before)
     growth = in_zone & prev_zone_dist.isNotNull() & (F.col("_sdist") > prev_zone_dist)
-    flagged = sim.withColumn("_in_zone", in_zone).withColumn(
-        "_b_oob", F.min(F.when(oob, F.col("_t"))).over(full_w)
-    ).withColumn("_b_grow", F.min(F.when(growth, F.col("_t"))).over(full_w))
+    flags = {
+        "_in_zone": in_zone,
+        "_b_oob": F.min(F.when(oob, F.col("_t"))).over(full_w),
+        "_b_grow": F.min(F.when(growth, F.col("_t"))).over(full_w),
+    }
 
     live = F.col("_t") < F.least(
         F.coalesce(F.col("_b_oob"), horizon), F.coalesce(F.col("_b_grow"), horizon)
     )
-    agg = (
-        flagged.withColumn(
-            "_sim_ll", F.max(F.when(live, F.col("_in_zone"))).over(full_w)
-        )
-        .withColumn(
-            "_sim_at", F.min(F.when(live & F.col("_in_zone"), F.col("_t"))).over(full_w)
-        )
-        .withColumn(
-            "_sim_mr",
-            F.min(F.when(live & F.col("_in_zone"), F.col("_sdist"))).over(full_w),
-        )
-    )
-
+    live_in_zone = live & F.col("_in_zone")
+    sims = {
+        "_sim_ll": F.max(F.when(live, F.col("_in_zone"))).over(full_w),
+        "_sim_at": F.min(F.when(live_in_zone, F.col("_t"))).over(full_w),
+        "_sim_mr": F.min(F.when(live_in_zone, F.col("_sdist"))).over(full_w),
+    }
+    first_step = F.col("_t") == 0
+    outputs = {
+        "alarm_ll": F.coalesce(F.col("_sim_ll"), F.lit(False)),
+        "alarm_time": F.coalesce(F.col("_sim_at"), F.lit(-1)),
+        "min_radius": F.when(~F.col("can_sim"), F.lit(0.0)).otherwise(
+            F.round(F.coalesce(F.col("_sim_mr"), F.lit(MIN_RADIUS_SENTINEL)), 4)
+        ),
+    }
     alt_ok = F.col("alt_geom").isNull() | (
         F.col("alt_geom") <= F.lit(cfg.most_generous_alt_m)
     )
-    return (
-        agg.filter(F.col("_t") == 0)
-        .withColumn("alarm_ll", F.coalesce(F.col("_sim_ll"), F.lit(False)))
-        .withColumn("alarm_time", F.coalesce(F.col("_sim_at"), F.lit(-1)))
-        .withColumn(
-            "min_radius",
-            F.when(~F.col("can_sim"), F.lit(0.0)).otherwise(
-                F.round(F.coalesce(F.col("_sim_mr"), F.lit(MIN_RADIUS_SENTINEL)), 4)
-            ),
-        )
-        .withColumn("alarm", F.col("alarm_ll") & alt_ok)
-        .drop(
-            "_shdg", "_t", "_slat", "_slon", "_sdist", "_in_zone",
-            "_b_oob", "_b_grow", "_sim_ll", "_sim_at", "_sim_mr",
-        )
+    alarm = F.col("alarm_ll") & alt_ok
+    temp_cols = (
+        "_shdg", "_t", "_slat", "_slon", "_sdist", "_in_zone",
+        "_b_oob", "_b_grow", "_sim_ll", "_sim_at", "_sim_mr",
     )
 
+    def apply(df: DataFrame) -> DataFrame:
+        sim = geo(df.withColumns(setup).withColumn("_t", steps))
+        return (
+            sim.withColumns(flags)
+            .withColumns(sims)
+            .filter(first_step)
+            .withColumns(outputs)
+            .withColumn("alarm", alarm)
+            .drop(*temp_cols)
+        )
 
-def dead_reckoning(
-    df: DataFrame, cfg: EngineConfig, exact_geodesic: bool = False
-) -> DataFrame:
+    return apply
+
+
+def build_dead_reckoning(cfg: EngineConfig, exact_geodesic: bool = False) -> Op:
     """D1 — relational unroll of get_alarm_info (airstrik.py:223-278).
 
     `exact_geodesic=True` swaps the spherical forward-geodesic step
@@ -232,35 +258,50 @@ def dead_reckoning(
     heading = F.coalesce(F.col("calc_heading"), F.col("nav_heading"))
     can_sim = heading.isNotNull() & F.col("calc_speed").isNotNull()
     geometry = _exact_geometry if exact_geodesic else _spherical_geometry
-    return _dead_reckoning_steps(df, cfg, heading, can_sim, geometry)
+    return _build_dead_reckoning_steps(cfg, heading, can_sim, geometry)
 
 
-def alarm_payload(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+def dead_reckoning(
+    df: DataFrame, cfg: EngineConfig, exact_geodesic: bool = False
+) -> DataFrame:
+    """build_dead_reckoning applied to `df`."""
+    return build_dead_reckoning(cfg, exact_geodesic)(df)
+
+
+def build_alarm_payload(cfg: EngineConfig) -> Op:
     """D2 — alert/warning event assembly (raise_alarm, airstrik.py:318-368;
     field contract README.md:57-68).  Routing (airstrik.py:238-241, 269-271):
     currently inside a configured geofence -> topic `airstrik-alert`, eta 0;
     else predicted entry within the horizon -> `airstrik-warning` with eta."""
     inside_now = matched_filters(F.col("distance"), F.lit(None), cfg) != ""
     warn = (F.col("alarm_time") > -1) & (F.col("alarm_time") < F.lit(cfg.think_ahead))
-    return (
-        df.filter(inside_now | warn)
-        .select(
-            F.col("hex").alias("plane_hex"),
-            F.col("flight").alias("plane_id"),
-            F.round("ts_sec", 6).alias("plane_time"),
-            F.round(F.coalesce(F.col("calc_heading"), F.col("nav_heading")), 6).alias(
-                "heading"
-            ),
-            F.col("calc_speed").alias("speed"),
-            # reference stringifies missing altitude as 'unknown' at the sink
-            # edge (README.md:63) — keep NULL in-engine, cast at the sink
-            F.col("alt_geom").alias("altitude"),
-            F.round("lat", 6).alias("latitude"),
-            F.round("lon", 6).alias("longitude"),
-            F.col("distance"),
-            F.when(inside_now, F.lit(0)).otherwise(F.col("alarm_time")).alias("eta"),
-            F.when(inside_now, F.lit("airstrik-alert"))
-            .otherwise(F.lit("airstrik-warning"))
-            .alias("topic"),
-        )
-    )
+    routed = inside_now | warn
+    fields = [
+        F.col("hex").alias("plane_hex"),
+        F.col("flight").alias("plane_id"),
+        F.round("ts_sec", 6).alias("plane_time"),
+        F.round(F.coalesce(F.col("calc_heading"), F.col("nav_heading")), 6).alias(
+            "heading"
+        ),
+        F.col("calc_speed").alias("speed"),
+        # reference stringifies missing altitude as 'unknown' at the sink
+        # edge (README.md:63) — keep NULL in-engine, cast at the sink
+        F.col("alt_geom").alias("altitude"),
+        F.round("lat", 6).alias("latitude"),
+        F.round("lon", 6).alias("longitude"),
+        F.col("distance"),
+        F.when(inside_now, F.lit(0)).otherwise(F.col("alarm_time")).alias("eta"),
+        F.when(inside_now, F.lit("airstrik-alert"))
+        .otherwise(F.lit("airstrik-warning"))
+        .alias("topic"),
+    ]
+
+    def apply(df: DataFrame) -> DataFrame:
+        return df.filter(routed).select(*fields)
+
+    return apply
+
+
+def alarm_payload(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """build_alarm_payload applied to `df`."""
+    return build_alarm_payload(cfg)(df)

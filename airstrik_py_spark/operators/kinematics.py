@@ -10,7 +10,7 @@ shuffle this stage needs, and it is reused by sessionization downstream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from airstrik_py_spark.config import EngineConfig
@@ -42,17 +42,14 @@ def dedup_consecutive(df: DataFrame, col: str = "lat", col2: str = "lon") -> Dat
     return df.withColumn("_changed", changed).filter("_changed").drop("_changed")
 
 
-def with_calc_heading(df: DataFrame) -> DataFrame:
+def calc_heading() -> Column:
     """W2 — great-circle initial bearing between the previous and current fix
     (airstrik.py:147-165, wired at 398-407).  NULL on each key's first row."""
     w = key_window()
-    return df.withColumn(
-        "calc_heading",
-        bearing_deg(F.lag("lat").over(w), F.lag("lon").over(w), F.col("lat"), F.col("lon")),
-    )
+    return bearing_deg(F.lag("lat").over(w), F.lag("lon").over(w), F.col("lat"), F.col("lon"))
 
 
-def with_calc_speed(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+def calc_speed(cfg: EngineConfig) -> Column:
     """W3 — ground speed km/h between the current fix and the oldest fix in
     the last `lookback_rows` rows (airstrik.py:371-409: N-row lookback, not
     time-based; geodesic meters / delta-seconds * 3.6, rounded to 4 dp)."""
@@ -64,23 +61,31 @@ def with_calc_speed(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     speed = (
         haversine_km(old_lat, old_lon, F.col("lat"), F.col("lon")) * 1000.0 / dt * 3.6
     )
-    return df.withColumn(
-        "calc_speed", F.round(F.when(dt > 0.0, speed), 4)
+    return F.round(F.when(dt > 0.0, speed), 4)
+
+
+def distance_home(cfg: EngineConfig) -> Column:
+    """W4 — great-circle km from HOME to the current fix, rounded to 4 dp
+    (calculate_distance, airstrik.py:430-439)."""
+    return F.round(
+        haversine_km(F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("lat"), F.col("lon")),
+        4,
     )
+
+
+def with_calc_heading(df: DataFrame) -> DataFrame:
+    """W2 as column `calc_heading`."""
+    return df.withColumn("calc_heading", calc_heading())
+
+
+def with_calc_speed(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """W3 as column `calc_speed`."""
+    return df.withColumn("calc_speed", calc_speed(cfg))
 
 
 def with_distance_home(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """W4 — great-circle km from HOME to the current fix, rounded to 4 dp
-    (calculate_distance, airstrik.py:430-439)."""
-    return df.withColumn(
-        "distance",
-        F.round(
-            haversine_km(
-                F.lit(cfg.home_lat), F.lit(cfg.home_lon), F.col("lat"), F.col("lon")
-            ),
-            4,
-        ),
-    )
+    """W4 as column `distance`."""
+    return df.withColumn("distance", distance_home(cfg))
 
 
 def with_kinematics(df: DataFrame, cfg: EngineConfig) -> DataFrame:

@@ -1,8 +1,19 @@
 """SparkSession factory tuned for the test harness and for scale.
 
-Local runs use local[N] with shuffle partitions ~= cores; on a real cluster
-the same builder settings (AQE, skew-join handling, Arrow) are the ones that
-matter at 100 TB — partition counts are left to AQE coalescing.
+Local runs use local[N] with shuffle partitions ~= cores: N is
+SPARK_GRAFT_CPUS when set, else the CPUs this process may run on (what
+`nproc` reports).  On a real cluster the same session settings (AQE,
+skew-join handling, Arrow) are the ones that matter at 100 TB — partition
+counts are left to AQE coalescing.
+
+DataFrame debugging (`spark.python.sql.dataFrameDebugging.enabled`) is
+off.  With it on, every pyspark Column call captures a Python stack and
+sends it to the JVM, several py4j round trips each; that was most of the
+time `run` spent building each micro-batch's alarm plan.  It is a static
+conf, so it is set here at launch.  What a user loses: an analysis
+error's query context no longer names the Python call site that built
+the failing Column.  `bench.py`, `tools/check.py` and the other tools
+also go through get_spark, so their timings shift with it.
 """
 
 from __future__ import annotations
@@ -13,7 +24,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "airstrik_py_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -25,6 +36,7 @@ def get_spark(app_name: str = "airstrik_py_spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

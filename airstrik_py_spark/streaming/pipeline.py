@@ -347,11 +347,16 @@ def alarm_foreach_batch(cfg: EngineConfig, sink):
     -> alarm_payload) over that batch's fixes.  `sink` receives the
     alert/warning payload frame (Kafka write or collect-print when no
     broker is configured, matching the reference's empty-address
-    fallback); an empty batch hands it an empty frame."""
-    from airstrik_py_spark.operators.alarm import alarm_payload, dead_reckoning, latest_fix
+    fallback); an empty batch hands it an empty frame.  The Column
+    expressions are built here, once, and each batch only applies them."""
+    from airstrik_py_spark.operators import alarm as AL
+
+    fix = AL.build_latest_fix(cfg)
+    reckon = AL.build_dead_reckoning(cfg)
+    payload = AL.build_alarm_payload(cfg)
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
-        sink(alarm_payload(dead_reckoning(latest_fix(batch_df, cfg), cfg), cfg), epoch_id)
+        sink(payload(reckon(fix(batch_df))), epoch_id)
 
     return run
 

@@ -194,3 +194,23 @@ def test_repl_reports_malformed_snapshot(tmp_path):
     assert "1 malformed snapshot(s) quarantined: " in res.stderr
     assert "bad.json" in res.stderr
     assert "a1" in res.stdout
+
+
+def test_get_spark_defaults_to_available_cpus():
+    """Without SPARK_GRAFT_CPUS the session sizes itself to the CPUs this
+    process may run on, not to a fixed 32."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    code = (
+        "import os\n"
+        "from airstrik_py_spark.session import get_spark\n"
+        "s = get_spark('cpus')\n"
+        "n = len(os.sched_getaffinity(0))\n"
+        "assert s.sparkContext.master == f'local[{n}]', s.sparkContext.master\n"
+        "assert s.conf.get('spark.sql.shuffle.partitions') == str(n)\n"
+        "s.stop()\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]

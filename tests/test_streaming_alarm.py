@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 import pytest
 
@@ -88,3 +89,98 @@ def test_empty_batch_hands_sink_an_empty_payload(spark, tmp_path):
     batch = flatten_snapshots(spark.read.schema(SNAPSHOT_SCHEMA).json(str(tape)))
     alarm_foreach_batch(REFERENCE, sink)(batch, 0)
     assert calls == [(0, [])]
+
+
+def _plane_batch(spark, path, t0, planes):
+    """A batch frame of two snapshots 20 s apart: each plane in `planes`,
+    (hex, lat, lon, alt), moves 0.04 deg north between them, so the
+    kinematics have a lookback inside the batch and near planes make
+    warnings as well as alerts."""
+    os.makedirs(path)
+    for i in range(2):
+        ac = [
+            {"hex": h, "flight": f"F{h}", "lat": lat + 0.04 * i, "lon": lon,
+             "alt_geom": alt, "seen": 0.1}
+            for h, lat, lon, alt in planes
+        ]
+        (path / f"s{i}.json").write_text(json.dumps({"now": t0 + 20 * i, "aircraft": ac}))
+    return flatten_snapshots(spark.read.schema(SNAPSHOT_SCHEMA).json(str(path)))
+
+
+def _three_batches(spark, tmp_path):
+    """Two plane batches with an empty snapshot between them."""
+    first = _plane_batch(
+        spark, tmp_path / "b0", BASE,
+        [("aa", 35.55, -78.696, 500.0), ("ab", 35.70, -78.69, 800.0),
+         ("ac", 36.40, -78.10, 9000.0), ("ad", 35.60, -78.70, None)],
+    )
+    (tmp_path / "b1").mkdir()
+    (tmp_path / "b1" / "s0.json").write_text(json.dumps({"now": BASE + 60, "aircraft": []}))
+    empty = flatten_snapshots(spark.read.schema(SNAPSHOT_SCHEMA).json(str(tmp_path / "b1")))
+    second = _plane_batch(
+        spark, tmp_path / "b2", BASE + 90,
+        [("aa", 35.65, -78.696, 500.0), ("ba", 35.72, -78.70, 300.0),
+         ("bb", 35.50, -78.60, 700.0)],
+    )
+    return [first, empty, second]
+
+
+def _payloads(pay_df):
+    return pay_df.columns, sorted(tuple(r) for r in pay_df.collect())
+
+
+def test_prebuilt_columns_carry_no_per_batch_state(spark, tmp_path):
+    """One callback run over three consecutive batches gives, for each
+    batch, what a fresh callback and the slug composition give on it."""
+    from airstrik_py_spark.operators.alarm import alarm_payload, dead_reckoning, latest_fix
+
+    batches = _three_batches(spark, tmp_path)
+    seen = {}
+
+    def sink(pay_df, epoch_id):
+        seen[epoch_id] = _payloads(pay_df)
+
+    callback = alarm_foreach_batch(REFERENCE, sink)
+    for epoch, batch in enumerate(batches):
+        callback(batch, epoch)
+
+    topics = set()
+    for epoch, batch in enumerate(batches):
+        fresh = {}
+        alarm_foreach_batch(REFERENCE, lambda df, e: fresh.update(p=_payloads(df)))(batch, epoch)
+        composed = _payloads(
+            alarm_payload(dead_reckoning(latest_fix(batch, REFERENCE), REFERENCE), REFERENCE)
+        )
+        assert seen[epoch] == fresh["p"] == composed
+        topics |= {row[-1] for row in seen[epoch][1]}
+    assert seen[1][1] == []
+    assert topics == {"airstrik-alert", "airstrik-warning"}
+
+
+def test_alarm_callback_build_round_trips(spark, tmp_path, monkeypatch):
+    """From callback entry to the sink call, a batch applies prebuilt
+    Columns: a bounded number of py4j round trips, independent of how
+    many Column calls the composition is written with.  Counted on the
+    second of two batches, so one-time setup is not in the budget, and in
+    this thread only: py4j's finalizer thread releases JVM references to
+    earlier tests' garbage in the background."""
+    from py4j.clientserver import ClientServerConnection
+
+    batches = _three_batches(spark, tmp_path)[::2]
+    sent = [0]
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == caller:
+            sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    at_sink = []
+    callback = alarm_foreach_batch(REFERENCE, lambda df, e: at_sink.append(sent[0]))
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    for epoch, batch in enumerate(batches):
+        sent[0] = 0
+        callback(batch, epoch)
+    assert len(at_sink) == 2
+    assert at_sink[1] <= 250, f"{at_sink[1]} py4j round trips to build one batch"
