@@ -74,8 +74,11 @@ def cmd_run(args) -> None:
     spark = get_spark("airstrik-run")
     from airstrik_py_spark.sources.snapshot import read_snapshot_stream
     from airstrik_py_spark.streaming.pipeline import (
+        RECEIVER_TRIP_STATE_ROWS,
         alarm_foreach_batch,
+        configure_state_partitions,
         foreach_batch_idempotent_parquet,
+        session_conf,
         stream_trips,
     )
 
@@ -98,27 +101,43 @@ def cmd_run(args) -> None:
     # lands under <out>/<database-out>
     store = os.path.join(args.out, args.database_out)
     trig = trigger_kwargs(cfg, bool(args.once))
-    alarms = _with_trigger(
-        stream.writeStream.foreachBatch(alarm_foreach_batch(cfg, alarm_sink)), trig
-    ).start()
-    trips_q = _with_trigger(
-        stream_trips(read_snapshot_stream(spark, _landing(args, cfg)), cfg)
-        .writeStream.foreachBatch(foreach_batch_idempotent_parquet(store)),
-        trig,
-    ).start()
-    # Wait on both: whichever query fails first ends `run` with its error
-    # and stops the survivor; --once returns once both have drained.
-    try:
-        while alarms.isActive or trips_q.isActive:
-            spark.streams.awaitAnyTermination()
-            spark.streams.resetTerminated()
-    finally:
-        alarms.stop()
-        trips_q.stop()
-    # a failure that landed between awaitAnyTermination and
-    # resetTerminated still surfaces here
-    alarms.awaitTermination()
-    trips_q.awaitTermination()
+    # Each micro-batch's files are listed again in getBatch; past the
+    # threshold (32 paths by default) Spark does that in a distributed job
+    # with one task per file, which took seconds per query on a 300-file
+    # backlog.  latestOffset has already listed the landing dir on the
+    # driver, so the second listing only stats known paths: milliseconds
+    # on the local dir dump1090 writes to.  The trade-off: with an
+    # object-store landing dir a backlog is stat'ed one file at a time on
+    # the driver.  The file source reads the setting from this session at
+    # every getBatch, so it holds until both queries have ended.
+    with session_conf(
+        spark, "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+    ):
+        alarms = _with_trigger(
+            stream.writeStream.foreachBatch(alarm_foreach_batch(cfg, alarm_sink)), trig
+        ).start()
+        # the trip query's state is a few hundred open sessions: one state
+        # partition commits once per batch instead of once per CPU
+        with configure_state_partitions(spark, RECEIVER_TRIP_STATE_ROWS):
+            trips_q = _with_trigger(
+                stream_trips(read_snapshot_stream(spark, _landing(args, cfg)), cfg)
+                .writeStream.foreachBatch(foreach_batch_idempotent_parquet(store)),
+                trig,
+            ).start()
+        # Wait on both: whichever query fails first ends `run` with its
+        # error and stops the survivor; --once returns once both have
+        # drained.
+        try:
+            while alarms.isActive or trips_q.isActive:
+                spark.streams.awaitAnyTermination()
+                spark.streams.resetTerminated()
+        finally:
+            alarms.stop()
+            trips_q.stop()
+        # a failure that landed between awaitAnyTermination and
+        # resetTerminated still surfaces here
+        alarms.awaitTermination()
+        trips_q.awaitTermination()
     print(f"trips written under {store}")
 
 

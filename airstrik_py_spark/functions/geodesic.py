@@ -503,6 +503,10 @@ def geodesic_dest_pandas_udf():
         # The think_ahead steps of one plane-fix share (lat, azi) and vary
         # only the distance, so memoize the prefix within the Arrow batch
         # (fresh dict per batch — per-row CSE, no state across calls).
+        # Bound: at most one entry per row of this Arrow batch, and a batch
+        # holds at most spark.sql.execution.arrow.maxRecordsPerBatch rows
+        # (10,000 by default); each entry is one prefix tuple of a few
+        # dozen floats, dropped when the batch returns.
         prefixes: dict[tuple[float, float], tuple] = {}
         out = []
         for a, b, c, d in zip(lat1, lon1, azi, dist_km):

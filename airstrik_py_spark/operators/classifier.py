@@ -102,6 +102,9 @@ def quality_lr_fit_score(docs: DataFrame, iters: int = LR_ITERS) -> DataFrame:
         n_files = 0
     if n_files < n_part:
         docs = docs.repartition(n_part)
+    # Cost: one job that keeps every doc's feature row in executor
+    # storage, memory first, then disk.  The blocks have no lineage behind
+    # them, so a lost executor fails the query (rerun it).
     feats = _features(docs).localCheckpoint()
     # Driver-carried model state: the weight vector is N_FEATS=4 integers —
     # the MLlib recipe (gradient sums aggregate to the driver, the update

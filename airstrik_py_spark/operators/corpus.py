@@ -258,6 +258,10 @@ def lm_perplexity_buckets(docs: DataFrame, buckets: int = 3) -> DataFrame:
     PLANS.md."""
     scored = lm_logprob(docs)
     order = [F.col("avg_logprob10").desc(), F.col("doc_id")]
+    # Lazy: the first action that reads `part` computes it and keeps the
+    # per-doc projection in executor storage, memory first, then disk.
+    # The blocks have no lineage behind them, so a lost executor fails
+    # the query (rerun it).
     part = (
         scored.repartitionByRange(*order)
         .withColumn("_pid", F.spark_partition_id())

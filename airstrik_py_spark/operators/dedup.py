@@ -348,7 +348,10 @@ def dedup_clusters(pairs: DataFrame) -> DataFrame:
         # pair pipeline (for semantic_dedup that is the full knn graph —
         # 78 s/round at sf10, and sparse random components have real
         # diameter, so rounds x upstream turned a 2-min query into 45+
-        # min; caught by the r9 sf10 sweep)
+        # min; caught by the r9 sf10 sweep).  Cost: one job that keeps
+        # the symmetric edge list in executor storage, memory first, then
+        # disk.  The blocks have no lineage behind them, so a lost
+        # executor fails the query (rerun it).
         .localCheckpoint()
     )
     labels = edges.select(F.col("src").alias("doc_id")).distinct().withColumn(
@@ -372,7 +375,8 @@ def dedup_clusters(pairs: DataFrame) -> DataFrame:
         )
         # checkpoint BEFORE the convergence probe so the round's join+agg
         # runs once and both the probe and the next round read the
-        # materialized frame
+        # materialized frame.  One job per round keeping one label row
+        # per doc; lost with its executor, like `edges`.
         merged = merged.localCheckpoint()
         done = merged.filter(F.col("new_lbl") != F.col("lbl")).isEmpty()
         labels = merged.select("doc_id", F.col("new_lbl").alias("lbl"))

@@ -48,6 +48,9 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS) -> DataF
     (node, pr_micro) after `iters` damped rounds from a uniform start."""
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     # The one partitioning the loop reuses: edges+outdeg keyed by src.
+    # Cost: one job that keeps the edge list in executor storage, memory
+    # first, then disk.  The blocks have no lineage behind them, so a lost
+    # executor fails the query (rerun it).
     ed = (
         edges.join(deg, "src")
         .select("src", "dst", "outdeg")
@@ -74,6 +77,8 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS) -> DataF
                     )
                 ).alias("pr"),
             )
+            # one job per round keeping one (node, pr) row per node; lost
+            # with its executor, like `ed`
             .localCheckpoint()
         )
     return pr.select("node", F.col("pr").alias("pr_micro"))

@@ -586,7 +586,10 @@ def kmeans_fit(
         # localCheckpoint truncates the per-iteration lineage: the k-row
         # centroid frame materializes eagerly (k*dim doubles) so each
         # assignment pass replans against a flat scan, not the whole
-        # unrolled Lloyd history
+        # unrolled Lloyd history.  Cost: one job per round that keeps
+        # the k x dim centroid doubles in executor storage.  The blocks
+        # have no lineage behind them, so a lost executor fails the query
+        # (rerun it).
         cents = _update_centroids(_assign_cells(ev, cents), dim).localCheckpoint()
     return _assign_cells(ev, cents).select("vec_id", "vec", "cell"), cents
 
@@ -867,12 +870,17 @@ def pq_fit(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     # One materialization of the iteration-invariant long form (r16 —
     # same rationale as kmeans_fit's ev): each Lloyd round's eager
     # centroid update otherwise re-ran scan + vec cast + repartition +
-    # 8x subvector explode, PQ_ITERS + 1 times.
+    # 8x subvector explode, PQ_ITERS + 1 times.  Cost: one job that keeps
+    # the whole long form (8 subvector rows per vector) in executor
+    # storage, memory first, then disk.  The blocks have no lineage
+    # behind them, so a lost executor fails the query (rerun it).
     sv = _pq_long(emb).localCheckpoint()
     cents = sv.filter(F.col("vec_id") < PQ_K).select(
         "sub", F.col("vec_id").cast("int").alias("cid"), F.col("subv").alias("cvec")
     )
     for _ in range(PQ_ITERS):
+        # one job per round keeping PQ_K x 8 subvector centroids; lost
+        # with its executor, like `sv`
         cents = _pq_update(_pq_assign(sv, cents)).localCheckpoint()
     return _pq_assign(sv, cents), cents
 
@@ -1238,7 +1246,10 @@ def pca_top_component(
     # pq_fit `sv` idiom): without this every power round re-runs the
     # global mean aggregate AND the centering scan — the lineage behind
     # `centered` executes iters+1 times.  Values unchanged (the 6-dp
-    # rounded mean is deterministic); inside the timed region.
+    # rounded mean is deterministic); inside the timed region.  Cost: one
+    # job that keeps every centered vector (rows x dim doubles) in
+    # executor storage, memory first, then disk.  The blocks have no
+    # lineage behind them, so a lost executor fails the query (rerun it).
     centered = (
         ev.crossJoin(F.broadcast(mean))
         .select("vec_id", F.zip_with("vec", "mvec", lambda a, b: a - b).alias("cvec"))
@@ -1265,6 +1276,8 @@ def pca_top_component(
             ]
         ).select(F.array(*[F.col(f"_w{i}") for i in range(dim)]).alias("wv"))
         norm = F.sqrt(dot(F.col("wv"), F.col("wv")))
+        # one job per round keeping a single dim-length row; lost with its
+        # executor, like `centered`
         vdf = w.select(
             F.transform("wv", lambda x: F.round(x / norm, 6)).alias("pvec"),
             F.round(norm, 6).alias("eigval"),

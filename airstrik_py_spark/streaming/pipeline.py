@@ -19,6 +19,9 @@ the batch operators' output.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,26 +37,54 @@ from airstrik_py_spark.operators import kinematics as K
 STATE_ROWS_PER_PARTITION = 4000
 
 
+# State rows `run`'s trip query holds for one receiver: the seed-1
+# perfbench replay tape (~130 aircraft in view) peaks at 471 open
+# sessions, and a 3,000-snapshot backlog of the same traffic drained as
+# one batch peaks at 3,591.  Both stay under STATE_ROWS_PER_PARTITION, so
+# the trip query gets one state partition.
+RECEIVER_TRIP_STATE_ROWS = 471
+
+
 def state_shuffle_partitions(est_state_rows: int, max_partitions: int = 128) -> int:
     """Shuffle-partition count for a STATEFUL streaming query, sized to
     state VOLUME rather than CPU count (the r8 stream-join profile,
     made a formula by the r9 state grid; both probe tools are removed,
     git history has them): P = clamp(ceil(state_rows /
     STATE_ROWS_PER_PARTITION), 1, max_partitions).  est_state_rows for
-    the interval join is (clicks + purchases) within the watermark span;
-    for keyed aggregations it is the live key count."""
+    `run`'s trip query is the open-session count (RECEIVER_TRIP_STATE_ROWS);
+    for the interval join it is (clicks + purchases) within the watermark
+    span; for keyed aggregations it is the live key count."""
     import math
 
     return max(1, min(max_partitions, math.ceil(max(est_state_rows, 1) / STATE_ROWS_PER_PARTITION)))
 
 
-def configure_state_partitions(spark, est_state_rows: int, max_partitions: int = 128) -> int:
-    """Apply state_shuffle_partitions to the session BEFORE the stateful
-    query's first start (the count binds at start and is sticky in the
-    checkpoint).  Returns the applied value."""
+@contextmanager
+def session_conf(spark, key: str, value: str) -> Iterator[None]:
+    """Set one runtime conf on the session for the block, then put the
+    previous value back."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+@contextmanager
+def configure_state_partitions(spark, est_state_rows: int, max_partitions: int = 128) -> Iterator[int]:
+    """Set the session's shuffle partitions to state_shuffle_partitions for
+    the stateful query started inside the block; yields the applied value.
+
+    The count binds when the query starts (start() clones the session conf,
+    and the checkpoint keeps it), so the block only has to cover start().
+    On exit the session's previous value is put back: `run` starts its
+    trip query this way while the alarm query, and anything the caller
+    runs in the same session afterwards (perfbench's traced replay runs
+    the headline queries there), keep the CPU-sized count."""
     p = state_shuffle_partitions(est_state_rows, max_partitions)
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    return p
+    with session_conf(spark, "spark.sql.shuffle.partitions", str(p)):
+        yield p
 
 
 def stream_trips(obs: DataFrame, cfg: EngineConfig) -> DataFrame:

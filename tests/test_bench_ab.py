@@ -99,3 +99,85 @@ def test_run_bench_raises_on_failure(monkeypatch, tmp_path):
         assert "boom" in str(e)
     else:
         raise AssertionError("expected RuntimeError")
+
+
+def test_parse_seeds():
+    assert bench_ab.parse_seeds("3-6") == [3, 4, 5, 6]
+    assert bench_ab.parse_seeds("7") == [7]
+
+
+def test_summarize_pairs_claim_rule():
+    """The claim needs 9/10 pairs won AND a median gap larger than the
+    baseline's interquartile range; ties count for neither side."""
+    base = [10.0, 11.0, 12.0, 10.5, 11.5, 12.5, 10.2, 11.2, 12.2, 11.8]
+    head = [b - 3.0 for b in base]
+    met = bench_ab.summarize_pairs(base, head, "lower", 0.25)
+    assert (met["wins"], met["losses"], met["pairs"]) == (10, 0, 10)
+    assert met["base_median"] == 11.35
+    assert met["base_iqr"] == met["base_q3"] - met["base_q1"] > 0
+    assert met["claim_met"] and met["within_bound"]
+
+    # every pair won, but by less than the baseline's own spread
+    small = bench_ab.summarize_pairs(base, [b - 0.1 for b in base], "lower", 0.25)
+    assert small["wins"] == 10 and not small["claim_met"]
+
+    # a big gap, but two of ten pairs tied: 8/10 won is short of 9/10
+    tied = head[:8] + base[8:]
+    short = bench_ab.summarize_pairs(base, tied, "lower", 0.25)
+    assert (short["wins"], short["losses"]) == (8, 0)
+    assert not short["claim_met"]
+
+    # "higher is better" flips the direction of wins and of the bound
+    up = bench_ab.summarize_pairs(base, head, "higher", 0.25)
+    assert up["losses"] == 10 and not up["claim_met"] and not up["within_bound"]
+
+
+def test_summarize_pairs_bound():
+    """within_bound: the change's median is no worse than the baseline's
+    by more than the bound's fraction of the baseline median."""
+    base = [100.0, 100.0, 100.0]
+    assert bench_ab.summarize_pairs(base, [124.0] * 3, "lower", 0.25)["within_bound"]
+    assert not bench_ab.summarize_pairs(base, [126.0] * 3, "lower", 0.25)["within_bound"]
+
+
+def test_perfbench_ab_alternates_and_summarizes(monkeypatch, tmp_path):
+    """One pair per seed in ABBA order.  A run that printed no result is
+    counted as bad, its pair is left out of the medians and counts as not
+    won, and the change's extra bad run alone denies the claim."""
+    calls = []
+    broken = set()
+
+    def fake_run(tree, workload, seed, seconds):
+        side = "base" if tree == "BASE" else "head"
+        calls.append((seed, side))
+        if (seed, side) in broken:
+            return {"error": "rc=1: boom"}
+        v = 10.0 if side == "base" else 7.0
+        return {
+            "correct": True, "attempted": 1, "failed": 0,
+            "metrics": {"latency_p50_ms": {"value": v + seed, "unit": "ms"},
+                        "setup_s": {"value": 5.0, "unit": "s"}},
+        }
+
+    monkeypatch.setattr(bench_ab, "run_perfbench", fake_run)
+
+    class Args:
+        perfbench = "replay_drain"
+        seeds = "1-4"
+
+    out = bench_ab.perfbench_ab(Args, "BASE")
+    assert calls == [(1, "base"), (1, "head"), (2, "head"), (2, "base"),
+                     (3, "base"), (3, "head"), (4, "head"), (4, "base")]
+    assert out["bad_runs"] == {"base": 0, "head": 0}
+    lat = out["summary"]["latency_p50_ms"]
+    assert (lat["pairs"], lat["wins"], lat["win_frac"]) == (4, 4, 1.0)
+    assert lat["claim_met"]
+    setup = out["summary"]["setup_s"]
+    assert (setup["wins"], setup["losses"]) == (0, 0) and not setup["claim_met"]
+
+    broken.add((3, "head"))
+    out = bench_ab.perfbench_ab(Args, "BASE")
+    assert out["bad_runs"] == {"base": 0, "head": 1}
+    lat = out["summary"]["latency_p50_ms"]
+    assert (lat["pairs"], lat["wins"], lat["win_frac"]) == (3, 3, 0.75)
+    assert not lat["claim_met"]

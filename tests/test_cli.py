@@ -214,3 +214,71 @@ def test_get_spark_defaults_to_available_cpus():
         capture_output=True, text=True, cwd=REPO, env=env, timeout=300,
     )
     assert res.returncode == 0, res.stderr[-2000:]
+
+
+def test_run_once_lists_on_driver_and_sizes_trip_state(tmp_path):
+    """A 40-snapshot backlog (past Spark's default parallel-listing
+    threshold of 32 paths) drains with no distributed listing job, the trip
+    query keeps its state in one partition, and the caller's session gets
+    its shuffle-partition count back."""
+    tape = tmp_path / "tape"
+    os.makedirs(tape)
+    for i in range(40):
+        snap = {
+            "now": BASE + 20 * i,
+            "aircraft": [
+                {"hex": f"p{j}", "lat": 35.8 + 0.01 * i, "lon": -78.7 + 0.1 * j,
+                 "alt_geom": 900.0, "seen": 0.1}
+                for j in range(3)
+            ],
+        }
+        (tape / f"s{i:03d}.json").write_text(json.dumps(snap))
+    code = f"""
+import argparse, json, threading, time
+from pyspark.sql.streaming import StreamingQueryListener
+import airstrik_py_spark.__main__ as cli
+
+class Listener(StreamingQueryListener):
+    def __init__(self):
+        self.progress, self.started, self.ended = [], set(), set()
+        self.lock = threading.Lock()
+    def onQueryStarted(self, e):
+        with self.lock: self.started.add(str(e.id))
+    def onQueryProgress(self, e):
+        with self.lock: self.progress.append(json.loads(e.progress.json))
+    def onQueryTerminated(self, e):
+        with self.lock: self.ended.add(str(e.id))
+
+listener, box = Listener(), {{}}
+get_spark = cli.get_spark
+def with_listener(*a, **k):
+    spark = box['spark'] = get_spark(*a, **k)
+    box['partitions'] = spark.conf.get('spark.sql.shuffle.partitions')
+    spark.streams.addListener(listener)
+    return spark
+cli.get_spark = with_listener
+cli.cmd_run(argparse.Namespace(landing_dir={str(tape)!r}, out={str(tmp_path / "out")!r},
+                               config=None, once=True, database_out='airstrikdb'))
+deadline = time.time() + 30
+while time.time() < deadline and not (len(listener.started) == 2 and listener.started <= listener.ended):
+    time.sleep(0.05)
+spark = box['spark']
+jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+listing = []
+for i in range(jobs.size()):
+    d = jobs.apply(i).description()
+    if d.isDefined() and d.get().startswith('Listing leaf files'):
+        listing.append(d.get())
+assert not listing, listing
+state = [p for p in listener.progress if p['stateOperators']]
+assert len({{p['id'] for p in state}}) == 1, state
+assert state[-1]['stateOperators'][0]['numShufflePartitions'] == 1, state[-1]
+assert spark.conf.get('spark.sql.shuffle.partitions') == box['partitions']
+print('OK')
+"""
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert "OK" in res.stdout

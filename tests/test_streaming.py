@@ -132,6 +132,65 @@ def test_stream_equals_batch_trips(spark, tmp_path):
     assert len(want) == 5
 
 
+def test_stream_trips_independent_of_state_partitions(spark, tmp_path):
+    """The trip query's state partition count is a cost choice, not a
+    semantic one: the same tape drained in 5-file micro-batches gives the
+    same trips with 1 state partition (what `run` uses) and with 4, and
+    both equal the batch trips of the closed sessions."""
+    from airstrik_py_spark.__main__ import _trips
+    from airstrik_py_spark.sources.snapshot import SNAPSHOT_SCHEMA, flatten_snapshots
+    from airstrik_py_spark.streaming.pipeline import (
+        STATE_ROWS_PER_PARTITION,
+        configure_state_partitions,
+    )
+
+    tape = str(tmp_path / "parts_tape")
+    os.makedirs(tape)
+    # 12 planes, a snapshot every 20 s; each plane sits out one block of
+    # five snapshots in three (a 120 s gap > remember), so trips close
+    # mid-tape and state carries across micro-batches
+    for i in range(30):
+        aircraft = [
+            {"hex": f"p{j:02d}", "flight": f"F{j}", "lat": 35.6 + 0.01 * i + 0.02 * j,
+             "lon": -78.8 + 0.01 * j, "alt_geom": 400.0 + 50 * j, "seen": 0.1}
+            for j in range(12)
+            if (i // 5 + j) % 3
+        ]
+        with open(os.path.join(tape, f"snap_{i:04d}.json"), "w") as f:
+            json.dump({"now": BASE + 20 * i, "aircraft": aircraft}, f)
+    with open(os.path.join(tape, "snap_9999.json"), "w") as f:
+        json.dump({"now": BASE + 10000, "aircraft": [{"hex": "zz", "lat": 0.0, "lon": 0.0, "seen": 0.1}]}, f)
+    cols = ["flight_id", "start_sec", "end_sec", "n_obs", "callsign", "closest_dist", "closest_sec"]
+
+    def drain(est_state_rows: int, name: str) -> tuple[int, list]:
+        stream = flatten_snapshots(
+            spark.readStream.schema(SNAPSHOT_SCHEMA).option("maxFilesPerTrigger", 5).json(tape)
+        )
+        with configure_state_partitions(spark, est_state_rows):
+            q = (
+                stream_trips(stream, CFG)
+                .writeStream.outputMode("append")
+                .format("memory")
+                .queryName(name)
+                .trigger(availableNow=True)
+                .start()
+            )
+        q.awaitTermination()
+        parts = q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+        return parts, sorted(tuple(r) for r in spark.table(name).select(*cols).collect())
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    one = drain(1, "trips_parts_1")
+    four = drain(4 * STATE_ROWS_PER_PARTITION, "trips_parts_4")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert (one[0], four[0]) == (1, 4)
+    assert one[1] == four[1]
+
+    batch = _trips(read_snapshot_batch(spark, tape), CFG).filter("flight_id <> 'zz'")
+    assert one[1] == sorted(tuple(r) for r in batch.select(*cols).collect())
+    assert len(one[1]) > 12  # most planes close more than one trip
+
+
 def test_stream_dedup_drops_replayed_rows(spark, tmp_path):
     """An at-least-once tape re-delivering the same snapshot must come out
     once: dropDuplicatesWithinWatermark on (hex, ts) with bounded state."""

@@ -181,17 +181,13 @@ def throughput_section(spark, sf_dir: str, scratch: str) -> dict[str, dict]:
     # watermark-span click+purchase buffers (~40% of the tape rows).
     from airstrik_py_spark.streaming.pipeline import configure_state_partitions
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    applied = configure_state_partitions(spark, int(n_ev * 0.4))
-    print(f"stream_ss_interval_join: auto state partitions = {applied}")
-    try:
+    with configure_state_partitions(spark, int(n_ev * 0.4)) as applied:
+        print(f"stream_ss_interval_join: auto state partitions = {applied}")
         record(
             "stream_ss_interval_join",
             n_ev,
             _drain(lambda: stream_touch_conversion_pairs(ev_stream())),
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     # Document ingest dedup: even doc_ids play the accepted corpus
     # (static digest side), odd doc_ids arrive as the stream.
