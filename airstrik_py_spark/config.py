@@ -92,7 +92,7 @@ def load_config(path: str) -> EngineConfig:
         for name, v in (raw.get("filters") or {}).items()
     )
     home = raw.get("home") or {}
-    defaults = EngineConfig()
+    defaults = REFERENCE  # an absent key keeps the reference's value
     return EngineConfig(
         home_lat=float(home.get("lat", defaults.home_lat)),
         home_lon=float(home.get("lon", defaults.home_lon)),

@@ -59,7 +59,8 @@ def cms_estimates(exact: DataFrame, sketch: DataFrame, w: int = CMS_W) -> DataFr
     each candidate probes its D cells in the broadcast sketch, estimate =
     min cell.  Returns (token, true_count, est_count) — the one place the
     probe hashing is written, shared by the query path and the error
-    measurement tool (tools/approx_error.py)."""
+    measurement behind APPROX.md (its tool is removed; git history has
+    it)."""
     probes = exact.select(
         "token",
         "true_count",

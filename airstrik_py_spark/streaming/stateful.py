@@ -9,9 +9,6 @@ windows (operators/kinematics.py, operators/decimation.py).  State per
 plane is O(1) (last position + two counters), evicted via processing-time
 timeout = 2x the session gap — bounded exactly like the reference's
 `del plane_history[hex]`.
-
-The module also holds the streaming last-touch attribution
-(make_attributor), the keyed-state twin of operators/events.py.
 """
 
 from __future__ import annotations
@@ -169,131 +166,3 @@ def tracked_stream(
         )
     )
 
-
-# --- streaming last-touch attribution (batch twin: operators/events.py::
-# attribution_last_touch) -------------------------------------------------
-
-ATTRIB_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("conversion_id", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("touch_id", T.LongType()),
-        T.StructField("gap_us", T.LongType()),
-    ]
-)
-
-# (latest touch event's epoch-us, its event_id) — O(1) per user, the
-# streaming analog of the batch window's last(ignorenulls) carry
-ATTRIB_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("t_us", T.LongType()),
-        T.StructField("t_id", T.LongType()),
-    ]
-)
-
-
-def make_attributor(
-    touch: str = "click", conversion: str = "purchase", live: bool = True,
-    ttl_ms: int = 24 * 3600 * 1000,
-):
-    """Keyed last-touch attribution state function: per user, remember
-    only the most recent touch event IN EVENT TIME (2 longs); every
-    conversion emits with the remembered touch.  The per-user micro-batch
-    payload is concatenated and sorted ONCE in (us, event_id) order —
-    applyInPandasWithState may split one group across pandas chunks, so a
-    per-chunk sort would not be a global order (ADVICE r7) — and a
-    conversion then reads state BEFORE a same-batch later touch updates
-    it.  Two guards pin the batch twin's strictly-preceding semantics
-    across out-of-order arrival BETWEEN batches: (1) the state update is
-    monotone (a late-arriving OLDER touch never overwrites a newer one),
-    and (2) at emission the remembered touch is used only when its
-    (t_us, t_id) strictly precedes the conversion's (us, event_id) — a
-    remembered touch at-or-after the conversion can only be a
-    late-delivered FUTURE touch, which the batch window attributes as
-    NULL (ADVICE r7).  The one remaining divergence is inherent to append
-    streams: a conversion already emitted before its true preceding touch
-    arrived keeps its at-emission (NULL or older-touch) attribution.
-    Parity with the batch twin is exact when each user's events arrive in
-    order across batches (the replay harness's property).  State TTL
-    evicts idle users (live mode), bounding state linearly in ACTIVE
-    users like the plane tracker."""
-
-    def attribute(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        t_us, t_id = state.get if state.exists else (None, None)
-        out = []
-        pdfs = list(batches)
-        if pdfs:
-            pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            pdf = pdf.sort_values(["us", "event_id"])
-            for row in pdf.itertuples(index=False):
-                if row.event_type == conversion:
-                    use = t_us is not None and (t_us, t_id) < (
-                        int(row.us), int(row.event_id)
-                    )
-                    out.append(
-                        (
-                            int(row.event_id),
-                            int(key[0]),
-                            float(row.value),
-                            t_id if use else None,
-                            int(row.us) - t_us if use else None,
-                        )
-                    )
-                if row.event_type == touch and (
-                    t_us is None or (int(row.us), int(row.event_id)) > (t_us, t_id)
-                ):
-                    t_us, t_id = int(row.us), int(row.event_id)
-        state.update((t_us, t_id))
-        if live:
-            state.setTimeoutDuration(ttl_ms)
-        if out:
-            yield pd.DataFrame(
-                out, columns=[f.name for f in ATTRIB_OUT_SCHEMA.fields]
-            )
-
-    return attribute
-
-
-def stream_attribution(
-    events: DataFrame,
-    touch: str = "click",
-    conversion: str = "purchase",
-    live: bool = True,
-) -> DataFrame:
-    """Streaming twin of attribution_last_touch over a (possibly
-    streaming) events frame.  Value is rounded by the ENGINE after the
-    stateful op so batch and stream share Spark's rounding exactly."""
-    from pyspark.sql import functions as F
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if live
-        else GroupStateTimeout.NoTimeout
-    )
-    e = events.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        F.unix_micros("ts").alias("us"),
-    )
-    out = e.groupBy("user_id").applyInPandasWithState(
-        make_attributor(touch, conversion, live),
-        outputStructType=ATTRIB_OUT_SCHEMA,
-        stateStructType=ATTRIB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-    return out.select(
-        "conversion_id",
-        "user_id",
-        F.round("value", 6).alias("value"),
-        "touch_id",
-        "gap_us",
-    )

@@ -57,6 +57,21 @@ def test_reference_profile_uses_full_precision_home():
     assert (TESTDATA.home_lat, TESTDATA.home_lon) == (35.727, -78.696)
 
 
+def test_partial_config_defaults_to_reference(tmp_path):
+    """A config.yaml that names one key keeps the reference's value for
+    every other one, home included: the same run as without --config,
+    not one whose origin sits ~40 m off at the rounded fixture home."""
+    import dataclasses
+
+    from airstrik_py_spark.config import REFERENCE
+
+    p = tmp_path / "config.yaml"
+    p.write_text("dump1090_dir: /var/run/dump1090\n")
+    assert load_config(str(p)) == dataclasses.replace(
+        REFERENCE, dump1090_dir="/var/run/dump1090"
+    )
+
+
 def test_trigger_kwargs_from_json_speed():
     """json_speed -> processingTime trigger (config.yaml:12, airstrik.py:86)."""
     from airstrik_py_spark.__main__ import trigger_kwargs
