@@ -54,9 +54,6 @@ class EngineConfig:
     # 0 = as fast as possible (maps to Spark's default micro-batch trigger,
     # > 0 maps to trigger(processingTime=...))
     json_speed_s: float = 0.0
-    # config.yaml:15 / airstrik.py:649 — document-store address (used by the
-    # mongo-connector write path when its jars are present)
-    mongo_address: str = "127.0.0.1:27017"
     # config.yaml:16 / airstrik.py:345,654-656 — empty = print fallback
     kafka_address: str = ""
     # config.yaml:11 / airstrik.py:90 — snapshot landing directory; the CLI's
@@ -82,7 +79,9 @@ class EngineConfig:
 def load_config(path: str) -> EngineConfig:
     """Load the reference's config.yaml shape (config.yaml:1-19, parsed at
     airstrik.py:28-46) into an EngineConfig — a drop-in for existing
-    deployments' config files."""
+    deployments' config files.  Keys with no engine counterpart, such as
+    config.yaml:15's document-store address (the store is parquet under
+    `--out`), are ignored."""
     import yaml
 
     with open(path) as f:
@@ -113,7 +112,6 @@ def load_config(path: str) -> EngineConfig:
         utc_time_offset_h=int(raw.get("utc_time_offset", defaults.utc_time_offset_h)),
         print_top_planes=int(raw.get("print_top_planes", defaults.print_top_planes)),
         json_speed_s=float(raw.get("json_speed", defaults.json_speed_s)),
-        mongo_address=str(raw.get("mongo_address", defaults.mongo_address)),
         kafka_address=str(raw.get("kafka_address", defaults.kafka_address)),
         dump1090_dir=str(raw.get("dump1090_dir", defaults.dump1090_dir)),
         filters=filters or defaults.filters,

@@ -8,9 +8,10 @@ hot path stays the spherical haversine Column expression (functions/geo.py)
 an ellipsoid-exact pandas_udf for users who need reference-identical
 numbers.
 
-Two independent published algorithms, implemented separately so they
-cross-validate each other (tests assert sub-millimetre mutual agreement —
-neither shares a line of math with the other):
+Karney's algorithm, with tests/test_geodesic.py holding an independent
+published algorithm (Vincenty 1975) as its cross-check: the tests assert
+sub-millimetre mutual agreement, and neither shares a line of math with
+the other:
 
   * `karney_inverse_km` — C. F. F. Karney, "Algorithms for geodesics",
     J. Geodesy 87, 43-55 (2013).  Auxiliary-sphere formulation: reduced
@@ -20,17 +21,19 @@ neither shares a line of math with the other):
     m12 machinery), azimuth alpha1 is solved by bisection on
     lambda12(alpha1), which Karney proves monotone after canonicalization —
     ~60 iterations of cheap series math, ample for a verification lane.
-  * `vincenty_inverse_km` — T. Vincenty, "Direct and inverse solutions of
+  * the direct problem (`_karney_direct_prefix` + `_karney_direct_step`)
+    — the same paper's §3 closed form.
+  * Vincenty (tests only) — T. Vincenty, "Direct and inverse solutions of
     geodesics on the ellipsoid" (1975).  Converges for all non-antipodal
     pairs; published accuracy 0.5 mm.
 
-Both are scalar Python wrapped in Arrow-batched pandas_udfs — fine for a
+Karney is scalar Python wrapped in Arrow-batched pandas_udfs — fine for a
 parity/verification lane, NOT for the 100 TB hot path (the haversine
 Column expression is; FLOATS.md quantifies what that trade costs per
 query).
 
 Scalar math.* is LOAD-BEARING, not an oversight: the
-alarm_dead_reckoning_exact oracle mirrors karney_direct
+alarm_dead_reckoning_exact oracle mirrors the direct problem
 operand-for-operand in DuckDB SQL, and both CPython's math module and
 DuckDB resolve to the platform libm, which is what makes that compare
 bit-exact (ORACLES-PORTABILITY §17).  Vectorizing with numpy would swap
@@ -115,10 +118,6 @@ def _i1(sigma: float, eps: float) -> float:
     return _a1(eps) * (sigma + _sin_series(sigma, _c1(eps)))
 
 
-def _i3_term(sigma: float, eps: float) -> float:
-    return _a3(eps) * (sigma + _sin_series(sigma, _c3(eps)))
-
-
 def _reduced_lat(phi_deg: float) -> tuple[float, float]:
     """(sin beta, cos beta) of the reduced latitude tan(beta)=(1-f)tan(phi),
     computed without the intermediate tan to stay finite at the poles."""
@@ -162,8 +161,8 @@ def _lam12_from_core(
     core: tuple[float, float, float, float, float, float],
 ) -> float:
     """lambda12 from the shared core.  A3/C3 are computed ONCE and reused
-    for both sigma terms — bit-identical to the former two _i3_term calls
-    (pure functions of eps; multiplication order preserved)."""
+    for both sigma terms — bit-identical to evaluating A3(eps) and C3(eps)
+    once per term (pure functions of eps; multiplication order preserved)."""
     s1, s2, w1, w2, sa0, eps = core
     a3 = _a3(eps)
     c3 = _c3(eps)
@@ -182,15 +181,6 @@ def _s12_from_core(
     return WGS84_B_M * (
         a1 * (s2 + _sin_series(s2, c1)) - a1 * (s1 + _sin_series(s1, c1))
     )
-
-
-def _karney_eval(
-    alpha1: float, sb1: float, cb1: float, sb2: float, cb2: float
-) -> tuple[float, float]:
-    """Given azimuth alpha1 at point 1 (canonical configuration), return
-    (lambda12, s12_m) along the geodesic through both latitudes."""
-    core = _karney_eval_core(alpha1, sb1, cb1, sb2, cb2)
-    return _lam12_from_core(core), _s12_from_core(core)
 
 
 def karney_inverse_km(
@@ -320,7 +310,7 @@ def _karney_direct_prefix(
     c1p = _c1p(eps)
     a3 = _a3(eps)
     c3 = _c3(eps)
-    i3_s1 = a3 * (s1_ + _sin_series(s1_, c3))  # == _i3_term(s1_, eps)
+    i3_s1 = a3 * (s1_ + _sin_series(s1_, c3))  # as in _lam12_from_core
     return sa0, ca0, w1, b_i1_s1, den, c1p, a3, c3, i3_s1
 
 
@@ -348,151 +338,13 @@ def _karney_direct_step(
     return lat2, lon2
 
 
-def karney_direct(
-    lat1: float, lon1: float, azi1_deg: float, s_km: float
-) -> tuple[float, float]:
-    """WGS-84 direct (destination-point) problem, Karney 2013 §3: from
-    (lat1, lon1) travel s_km along initial azimuth azi1_deg (clockwise from
-    north).  Returns (lat2, lon2) with lon2 normalized to [-180, 180].
-    Closed form — no iteration: sigma2 comes from the published inverse
-    series (eq. 20-21), not from root-finding."""
-    return _karney_direct_step(_karney_direct_prefix(lat1, azi1_deg), lon1, s_km)
-
-
-# --- Vincenty 1975 ----------------------------------------------------------
-
-
-def vincenty_inverse_km(
-    lat1: float, lon1: float, lat2: float, lon2: float, max_iter: int = 200
-) -> float:
-    """WGS-84 geodesic distance (km), Vincenty inverse formula.  Raises
-    ValueError on non-convergence (near-antipodal pairs — Karney covers
-    those)."""
-    if lat1 == lat2 and (lon1 - lon2) % 360.0 == 0.0:
-        return 0.0
-    u1 = math.atan((1.0 - WGS84_F) * math.tan(math.radians(lat1)))
-    u2 = math.atan((1.0 - WGS84_F) * math.tan(math.radians(lat2)))
-    big_l = math.radians(math.remainder(lon2 - lon1, 360.0))
-    su1, cu1 = math.sin(u1), math.cos(u1)
-    su2, cu2 = math.sin(u2), math.cos(u2)
-    lam = big_l
-    for _ in range(max_iter):
-        sl, cl = math.sin(lam), math.cos(lam)
-        sin_sigma = math.hypot(cu2 * sl, cu1 * su2 - su1 * cu2 * cl)
-        if sin_sigma == 0.0:
-            return 0.0  # coincident
-        cos_sigma = su1 * su2 + cu1 * cu2 * cl
-        sigma = math.atan2(sin_sigma, cos_sigma)
-        sin_alpha = cu1 * cu2 * sl / sin_sigma
-        cos2_alpha = 1.0 - sin_alpha * sin_alpha
-        cos_2sm = (
-            cos_sigma - 2.0 * su1 * su2 / cos2_alpha if cos2_alpha != 0.0 else 0.0
-        )
-        c = WGS84_F / 16.0 * cos2_alpha * (4.0 + WGS84_F * (4.0 - 3.0 * cos2_alpha))
-        lam_prev = lam
-        lam = big_l + (1.0 - c) * WGS84_F * sin_alpha * (
-            sigma
-            + c
-            * sin_sigma
-            * (cos_2sm + c * cos_sigma * (-1.0 + 2.0 * cos_2sm * cos_2sm))
-        )
-        if abs(lam - lam_prev) < 1e-13:
-            break
-    else:
-        raise ValueError("vincenty failed to converge (near-antipodal?)")
-    u2_ = cos2_alpha * _EP2
-    a = 1.0 + u2_ / 16384.0 * (4096.0 + u2_ * (-768.0 + u2_ * (320.0 - 175.0 * u2_)))
-    b = u2_ / 1024.0 * (256.0 + u2_ * (-128.0 + u2_ * (74.0 - 47.0 * u2_)))
-    d_sigma = (
-        b
-        * sin_sigma
-        * (
-            cos_2sm
-            + b
-            / 4.0
-            * (
-                cos_sigma * (-1.0 + 2.0 * cos_2sm * cos_2sm)
-                - b
-                / 6.0
-                * cos_2sm
-                * (-3.0 + 4.0 * sin_sigma * sin_sigma)
-                * (-3.0 + 4.0 * cos_2sm * cos_2sm)
-            )
-        )
-    )
-    return WGS84_B_M * a * (sigma - d_sigma) / 1000.0
-
-
-def vincenty_direct(
-    lat1: float, lon1: float, azi1_deg: float, s_km: float, max_iter: int = 200
-) -> tuple[float, float]:
-    """WGS-84 direct problem, Vincenty 1975 (the iterative sigma form).
-    Independent of karney_direct — shares no series or intermediate with
-    it, so their mutual agreement cross-validates both."""
-    s = s_km * 1000.0
-    alpha1 = math.radians(azi1_deg)
-    sa1, ca1 = math.sin(alpha1), math.cos(alpha1)
-    tan_u1 = (1.0 - WGS84_F) * math.tan(math.radians(lat1))
-    cu1 = 1.0 / math.sqrt(1.0 + tan_u1 * tan_u1)
-    su1 = tan_u1 * cu1
-    sigma1 = math.atan2(tan_u1, ca1)
-    sin_alpha = cu1 * sa1
-    cos2_alpha = 1.0 - sin_alpha * sin_alpha
-    u2 = cos2_alpha * _EP2
-    a = 1.0 + u2 / 16384.0 * (4096.0 + u2 * (-768.0 + u2 * (320.0 - 175.0 * u2)))
-    b = u2 / 1024.0 * (256.0 + u2 * (-128.0 + u2 * (74.0 - 47.0 * u2)))
-    sigma = s / (WGS84_B_M * a)
-    for _ in range(max_iter):
-        two_sm = 2.0 * sigma1 + sigma
-        cos_2sm = math.cos(two_sm)
-        ss, cs = math.sin(sigma), math.cos(sigma)
-        d_sigma = (
-            b
-            * ss
-            * (
-                cos_2sm
-                + b
-                / 4.0
-                * (
-                    cs * (-1.0 + 2.0 * cos_2sm * cos_2sm)
-                    - b
-                    / 6.0
-                    * cos_2sm
-                    * (-3.0 + 4.0 * ss * ss)
-                    * (-3.0 + 4.0 * cos_2sm * cos_2sm)
-                )
-            )
-        )
-        sigma_prev = sigma
-        sigma = s / (WGS84_B_M * a) + d_sigma
-        if abs(sigma - sigma_prev) < 1e-13:
-            break
-    else:
-        raise ValueError("vincenty direct failed to converge")
-    ss, cs = math.sin(sigma), math.cos(sigma)
-    cos_2sm = math.cos(2.0 * sigma1 + sigma)
-    lat2 = math.degrees(
-        math.atan2(
-            su1 * cs + cu1 * ss * ca1,
-            (1.0 - WGS84_F)
-            * math.hypot(sin_alpha, su1 * ss - cu1 * cs * ca1),
-        )
-    )
-    lam = math.atan2(ss * sa1, cu1 * cs - su1 * ss * ca1)
-    c = WGS84_F / 16.0 * cos2_alpha * (4.0 + WGS84_F * (4.0 - 3.0 * cos2_alpha))
-    big_l = lam - (1.0 - c) * WGS84_F * sin_alpha * (
-        sigma + c * ss * (cos_2sm + c * cs * (-1.0 + 2.0 * cos_2sm * cos_2sm))
-    )
-    lon2 = math.remainder(lon1 + math.degrees(big_l), 360.0)
-    return lat2, lon2
-
-
 def geodesic_dest_pandas_udf():
-    """Arrow-batched pandas_udf over karney_direct: the ellipsoid-exact
-    DESTINATION-POINT lane for D1's dead-reckoning unroll (VERDICT r11 #5).
-    Returns a struct<lat double, lon double>.  Verification-grade — the
-    100 TB hot path stays the spherical Column expressions in
-    functions/geo.py (FLOATS.md §D1 quantifies the trade)."""
+    """Arrow-batched pandas_udf over the Karney direct problem: the
+    ellipsoid-exact DESTINATION-POINT lane for D1's dead-reckoning unroll
+    (VERDICT r11 #5).  Returns a struct<lat double, lon double>.
+    Verification-grade — the 100 TB hot path stays the spherical Column
+    expressions in functions/geo.py (FLOATS.md §D1 quantifies the
+    trade)."""
     import pandas as pd  # noqa: F811 (module-level import exists)
     from pyspark.sql.functions import pandas_udf
 

@@ -11,14 +11,3 @@ from pyspark.sql import functions as F
 def tokens(text: Column) -> Column:
     """Whitespace tokenization (the documents fixture is space-delimited)."""
     return F.split(text, " ")
-
-
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
-def avg_token_len(text: Column) -> Column:
-    """Mean token length = (chars - spaces) / tokens."""
-    n_tok = token_count(text).cast("double")
-    n_chars = F.length(text).cast("double")
-    return (n_chars - (n_tok - 1.0)) / n_tok

@@ -231,7 +231,7 @@ def build_dead_reckoning(cfg: EngineConfig, exact_geodesic: bool = False) -> Op:
 
     `exact_geodesic=True` swaps the spherical forward-geodesic step
     positions for the WGS-84 ellipsoid DIRECT solution
-    (functions/geodesic.py::karney_direct) AND the spherical haversine
+    (geodesic.py::geodesic_dest_pandas_udf) AND the spherical haversine
     zone distance for the ellipsoid INVERSE solution (karney_inverse_km),
     both via Arrow-batched pandas_udfs — the reference-identical lane,
     since the reference's destination() / geodesic() are the same Karney

@@ -97,15 +97,6 @@ def zorder_plan(events: DataFrame) -> DataFrame:
     )
 
 
-def write_day_partitioned(df: DataFrame, path: str, day_col: str = "day") -> None:
-    """Directory-partitioned parquet by day — the time axis of the 100 TB
-    layout (bucketing covers the key axis).  A day-ranged query then scans
-    only matching directories: tests/test_bucketing.py pins PartitionFilters
-    in the scan.  Day files stay append-friendly for the daily stats upsert
-    (sink_stats_daily) and TTL deletes are directory drops."""
-    df.write.mode("overwrite").partitionBy(day_col).parquet(path)
-
-
 def write_bucketed(
     spark: SparkSession,
     df: DataFrame,

@@ -43,9 +43,8 @@ exists (branch C never skips).  Since r10 the REGISTERED DuckDB oracle is
 the closed-form cadence too (registry/sinks_q.py::_decim_closed_ctes —
 the recursive fold's depth = longest trip blew the 900 s oracle budget on
 the adversarial 200k-row hot hex, VERDICT r9 #4); the packet-by-packet
-fold (_decim_fold_ctes) is retained as the independent derivation and
-pinned equal to the closed form on the real fixtures by
-tests/test_decimation_oracle.py.
+fold lives in tests/test_decimation_oracle.py as the independent
+derivation, pinned equal to the closed form on the real fixtures.
 
 A write emits the history HEADS — the last known (value, entry-ts) pair
 per attribute (airstrik.py:602-604), not the triggering packet's own

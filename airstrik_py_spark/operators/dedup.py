@@ -244,30 +244,6 @@ def _simhash_block_ints(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_signature(docs: DataFrame) -> DataFrame:
-    """64-bit SimHash over whitespace tokens: bit j set when the sum over
-    token occurrences of ±1 is positive; the ±1 for bit j reads md5 hex
-    nibble j//4 at nibble-bit (3 - j%4) — the HEX_BIT_SETS convention.
-    The '0'/'1' string renders from the block-int core (one shift+mask
-    per bit, codegen) — same strings as the direct concat, single source
-    of truth for the fold."""
-    bi = _simhash_block_ints(docs)
-    block_w = SIMHASH_BITS // SIMHASH_BLOCKS
-    sig = F.concat(
-        *[
-            F.when(
-                F.shiftright(
-                    F.col(f"b{j // block_w}"), block_w - 1 - (j % block_w)
-                ).bitwiseAND(F.lit(1))
-                == 1,
-                F.lit("1"),
-            ).otherwise(F.lit("0"))
-            for j in range(SIMHASH_BITS)
-        ]
-    )
-    return bi.select("doc_id", sig.alias("sig"))
-
-
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs at hamming <= max_hamming, via block-bucketed joins
     (share >= 1 of the 4 16-bit blocks — pigeonhole-complete for

@@ -88,14 +88,6 @@ def with_distance_home(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     return df.withColumn("distance", distance_home(cfg))
 
 
-def with_kinematics(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """W1 + W2 + W3 + W4 composed in the reference's order: dedup first
-    (airstrik.py:576-577), then derive (airstrik.py:578-583)."""
-    return with_distance_home(
-        with_calc_speed(with_calc_heading(dedup_consecutive(df)), cfg), cfg
-    )
-
-
 def latest_per_key(df: DataFrame, value_cols: list[str]) -> DataFrame:
     """W8 — the "current" value of each attribute per key = value at max ts
     (the reference's pervasive history[-1][0], e.g. airstrik.py:233,377).

@@ -568,9 +568,16 @@ def kmeans_fit(
     iters: int = KMEANS_ITERS,
     dim: int = SRP_DIM,
 ) -> tuple[DataFrame, DataFrame]:
-    """Lloyd training returning BOTH the final assignment (vec_id, vec,
-    cell) and the trained centroid table (cell, cvec) — the latter feeds
-    multi-probe queries."""
+    """Deterministic Lloyd k-means over the embedding column: init centroids
+    are the `n_cells` lowest vec_ids (engine-agnostic seed), then `iters`
+    rounds of broadcast-assign + map-side-combined mean update.  Returns
+    BOTH the final assignment (vec_id, vec, cell) — the trained coarse
+    quantizer for IVF — and the trained centroid table (cell, cvec), which
+    feeds multi-probe queries.
+
+    Scale: per iteration the N-row side does one broadcast join (no
+    shuffle) and one k-group aggregate (partial agg, k*dim doubles on the
+    wire)."""
     # NOT checkpointed (r16 adjudication): materializing ev once for the
     # Lloyd loop was tried and measured FLAT at sf0.1 (ann_ivf_kmeans
     # 4.5-4.8 s vs 4.0-4.9 s across interleaved pairs) — the per-round
@@ -592,24 +599,6 @@ def kmeans_fit(
         # (rerun it).
         cents = _update_centroids(_assign_cells(ev, cents), dim).localCheckpoint()
     return _assign_cells(ev, cents).select("vec_id", "vec", "cell"), cents
-
-
-def kmeans_cells(
-    emb: DataFrame,
-    n_cells: int = KMEANS_CELLS,
-    iters: int = KMEANS_ITERS,
-    dim: int = SRP_DIM,
-) -> DataFrame:
-    """Deterministic Lloyd k-means over the embedding column: init centroids
-    are the `n_cells` lowest vec_ids (engine-agnostic seed), then `iters`
-    rounds of broadcast-assign + map-side-combined mean update.  Returns
-    (vec_id, vec, cell) — the trained coarse quantizer for IVF.
-
-    Scale: per iteration the N-row side does one broadcast join (no
-    shuffle) and one k-group aggregate (partial agg, k*dim doubles on the
-    wire); the k-row centroid frame localCheckpoints per iteration so
-    lineage stays flat."""
-    return kmeans_fit(emb, n_cells, iters, dim)[0]
 
 
 KMEANS_PROBES = 2

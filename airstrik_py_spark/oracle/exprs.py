@@ -315,7 +315,8 @@ def duck_dest_lon(lat1: str, lon1: str, lat2_deg: str, brg_deg: str, dist_km: st
 
 
 # --- WGS-84 ellipsoid DIRECT problem (Karney 2013), SQL mirror --------------
-# Mirror of functions/geodesic.py::karney_direct for the D1 exact lane.
+# Mirror of functions/geodesic.py::_karney_direct_prefix/_karney_direct_step
+# for the D1 exact lane.
 # Constants are emitted via repr() so the SQL literals are bit-identical to
 # the Python module's doubles; every expression below copies the Python
 # source's operand ORDER (same-precedence chains associate left in both
@@ -423,20 +424,20 @@ def _sin_series_sql(sigma: str, coeffs: list[str]) -> str:
 # distance to HOME with an ellipsoid geodesic (airstrik.py:259), so the
 # exact lane's engine side calls karney_inverse_km via a pandas_udf and this
 # mirror replays the SAME bisection in SQL — same canonicalization, same
-# per-iteration _karney_eval operand order, same `hi - lo < 1e-15` break,
-# same final I1 evaluation at the converged midpoint.  Known seams, shared
-# with the direct-problem mirror above and absorbed by the zone margin /
-# 4-dp rounding: math.hypot -> sqrt(x*x+y*y), math.remainder ->
+# per-iteration _karney_eval_core + _lam12_from_core operand order, same
+# `hi - lo < 1e-15` break, same final I1 evaluation at the converged
+# midpoint.  Known seams, shared with the direct-problem mirror above and
+# absorbed by the zone margin / 4-dp rounding: math.hypot -> sqrt(x*x+y*y), math.remainder ->
 # x - 360*round(x/360) (equal after abs() for |x| <= 360), libm ulps.
 # The engine's `s12 < 0` sanity raise has no SQL equivalent — if it ever
 # fired, the ENGINE side errors and the compare fails loudly anyway.
 
 
 def _karney_eval_nest(src_sql: str, ep2_lit: str) -> str:
-    """Nested-subquery chain computing _karney_eval's shared intermediates
-    (mid, angles, eps, ee) from `src_sql` rows carrying csb1, ccb1, csb2,
-    ccb2, lo, hi — copied operand-for-operand from geodesic._karney_eval
-    (sa2 is dead code there and is skipped)."""
+    """Nested-subquery chain computing _karney_eval_core's shared
+    intermediates (mid, angles, eps, ee) from `src_sql` rows carrying csb1,
+    ccb1, csb2, ccb2, lo, hi — copied operand-for-operand from
+    geodesic._karney_eval_core, with lam12 as in _lam12_from_core."""
     return f"""(
       SELECT *, eps * eps AS ee FROM (
         SELECT *, (sq - 1.0e0) / (sq + 1.0e0) AS eps FROM (
@@ -594,7 +595,7 @@ def dead_reckoning_exact_ctes(
     pipeline as dead_reckoning_ctes, but each step's destination point is
     the WGS-84 direct problem (Karney 2013) instead of the spherical
     forward formulas — mirroring operators/alarm.py::dead_reckoning with
-    exact_geodesic=True (geodesic_dest_pandas_udf -> karney_direct).
+    exact_geodesic=True (geodesic_dest_pandas_udf -> _karney_direct_step).
     Per-plane geodesic constants (Clairaut, eps, series coefficients,
     I1/I3 at sigma1) are hoisted into one CTE; each of the think_ahead
     steps costs only the inverse-series + I3 evaluation.  sim_dist is the

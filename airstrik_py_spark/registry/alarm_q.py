@@ -39,8 +39,8 @@ def q_alarm_dead_reckoning_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 with WGS-84 ellipsoid-exact step positions AND zone distance
     (VERDICT r11 #5 made queryable; ADVICE r12 closed the zone-distance
     half): dead_reckoning(exact_geodesic=True) swaps the spherical
-    destination formulas for karney_direct — the same direct problem
-    the reference's destination() solves (airstrik.py:245-258) — and
+    destination formulas for geodesic_dest_pandas_udf — the same direct
+    problem the reference's destination() solves (airstrik.py:245-258) — and
     measures each simulated point's distance to HOME with
     karney_inverse_km, the same inverse problem the reference's
     geodesic() solves (airstrik.py:259).  Both

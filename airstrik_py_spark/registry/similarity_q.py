@@ -61,7 +61,7 @@ _MASKS = ", ".join(str(m) for m in SIM.srp_probe_masks())
 
 def _kmeans_ctes(n_cells: int, iters: int, dim: int) -> str:
     """Unrolled Lloyd iterations as DuckDB CTEs mirroring
-    operators/similarity.py::kmeans_cells exactly: squared-L2 rounded to 6
+    operators/similarity.py::kmeans_fit exactly: squared-L2 rounded to 6
     dp before the argmin (ORDER BY dist, cell = Spark's struct array_min),
     coordinate means rounded to 6 dp (the literal [round(avg(v[i]),6)...]
     list = Spark's per-coordinate agg).  DuckDB lists are 1-based, Spark

@@ -61,7 +61,10 @@ class Repl:
         return [self._dispatch(part.strip()) for part in line.split(" & ")]
 
     def _dispatch(self, stmt: str) -> DataFrame:
-        cmd, *args = shlex.split(stmt)
+        words = shlex.split(stmt)
+        if not words:
+            raise ValueError("empty statement")
+        cmd, *args = words
         if cmd == "list":
             if args and args[0] in ("db", "dbs", "database", "databases"):
                 return self.spark.sql("SHOW DATABASES")
@@ -84,10 +87,14 @@ class Repl:
             out.createOrReplaceTempView("last_search")
             return out
         if cmd == "dump":
+            if not args:
+                raise ValueError("usage: dump <path>")
             matched = self.spark.table("last_search").join(self.obs, "hex")
             write_json(matched, args[0])
             return matched
         if cmd == "drop":
+            if not args:
+                raise ValueError("usage: drop <name>")
             return self._drop(args[0])
         if cmd == "use":
             return self._use(args)

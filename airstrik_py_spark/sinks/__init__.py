@@ -4,8 +4,8 @@ The reference writes row-at-a-time to Mongo collections and a Kafka producer
 (airstrik.py:543, 584-626, 318-368, 668-691; csvdump.py; dbread dump).  Here
 every sink is a DataFrame writer:
 
-  * trip/decimated/stats stores -> parquet (or the Mongo Spark connector when
-    its jars are on the classpath — guarded import, not in this container);
+  * trip/decimated/stats stores -> parquet under `--out`; nested documents
+    map to parquet structs losslessly;
   * Kafka alert/warning -> to_json payload + topic column for
     format("kafka") (or collected for print fallback when no broker is
     configured, matching the reference's empty-address behavior);
@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MONGO_CONNECTOR_AVAILABLE = False  # mongo-spark jars not in this container
-
 
 def trip_documents(assembled: DataFrame, cfg) -> DataFrame:
     """The EXACT nested flight_records document shape (SURVEY §1.3,
@@ -28,7 +26,7 @@ def trip_documents(assembled: DataFrame, cfg) -> DataFrame:
     `filters map<string, struct<dist, alt>>`, `flight_id`.
 
     Input: trips_with_asof output (+ trip_name).  Parquet stores this
-    losslessly; the Mongo connector maps it 1:1 to BSON documents."""
+    losslessly."""
     pair = lambda v, t: F.when(  # noqa: E731
         v.isNotNull(), F.struct(v.alias("value"), t.alias("ts"))
     )
@@ -87,12 +85,6 @@ def trip_documents(assembled: DataFrame, cfg) -> DataFrame:
     )
 
 
-def write_store(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S3/S4/S6 — the document-store write (parquet stand-in for Mongo;
-    nested docs map to parquet structs losslessly)."""
-    df.write.mode(mode).parquet(path)
-
-
 def read_store(spark, path: str) -> DataFrame:
     """Read a document store written across schema epochs: mergeSchema
     unions the per-file schemas (e.g. a legacy epoch carrying the
@@ -102,22 +94,6 @@ def read_store(spark, path: str) -> DataFrame:
     parquet read would pin the first footer's schema and silently drop
     later columns."""
     return spark.read.option("mergeSchema", True).parquet(path)
-
-
-def write_store_mongo(df: DataFrame, uri: str, database: str, collection: str) -> None:
-    """Mongo connector path — guarded: raises in this container."""
-    if not MONGO_CONNECTOR_AVAILABLE:  # pragma: no cover
-        raise NotImplementedError(
-            "mongo-spark-connector jars not installed; use write_store (parquet)"
-        )
-    (
-        df.write.format("mongodb")
-        .option("connection.uri", uri)
-        .option("database", database)
-        .option("collection", collection)
-        .mode("append")
-        .save()
-    )
 
 
 def kafka_records(payload_df: DataFrame) -> DataFrame:

@@ -10,16 +10,12 @@ Spark-first equivalents:
     readStream on the snapshot landing directory picks up each new snapshot
     exactly once — no polling code at all;
   * the `aircraft[]` flatten is explode() on the parsed struct;
-  * the subprocess watchdog maps to a producer process outside the engine +
-    StreamingQueryListener for failure handling (S2: the engine only needs
-    the landing dir/topic, so the adapter here just manages the process and
-    its output directory).
+  * the decoder is a producer outside the engine (S2): it runs under its
+    own supervisor and writes snapshots into the landing dir, and `run`
+    reads only that dir.
 """
 
 from __future__ import annotations
-
-import subprocess
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -178,36 +174,3 @@ def read_snapshot_batch_quarantined(
     )
     return good, quarantine
 
-
-class DecoderAdapter:
-    """S2 — manage an external decoder process (dump1090/dump978) writing
-    snapshots into the landing dir; `crashed` mirrors the reference's
-    end_process flag (airstrik.py:75, 92, 120).  The engine itself never
-    depends on this class — any producer filling the landing dir works."""
-
-    def __init__(self, cmd: list[str], landing_dir: str):
-        self.cmd = cmd
-        self.landing_dir = landing_dir
-        self.proc: subprocess.Popen | None = None
-        self.crashed = False
-        self._stopping = False
-        self._watch: threading.Thread | None = None
-
-    def start(self) -> None:
-        self.proc = subprocess.Popen(self.cmd)  # noqa: S603
-        self._watch = threading.Thread(target=self._monitor, daemon=True)
-        self._watch.start()
-
-    def _monitor(self) -> None:
-        # Reference parity (airstrik.py:71-74, 88-91): end_process is set
-        # only on a NONZERO returncode — a clean exit is not a crash, and
-        # an intentional stop() (our analogue of the reference's atexit
-        # terminate) must not read as one either.
-        if self.proc is not None:
-            self.proc.wait()
-            self.crashed = bool(self.proc.returncode) and not self._stopping
-
-    def stop(self) -> None:
-        self._stopping = True
-        if self.proc is not None and self.proc.poll() is None:
-            self.proc.terminate()

@@ -40,23 +40,6 @@ def test_write_bucketed_idempotent(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS tb_i")
 
 
-def test_day_partition_pruning(spark, tmp_path):
-    """A day-filtered read over day-partitioned parquet must prune at the
-    directory level (PartitionFilters in the scan, not a post-scan filter)."""
-    from airstrik_py_spark.operators.bucketing import write_day_partitioned
-
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("v"),
-        F.date_add(F.lit("2026-01-01").cast("date"), (F.col("id") % 7).cast("int")).alias("day"),
-    )
-    path = str(tmp_path / "byday")
-    write_day_partitioned(df, path)
-    rd = spark.read.parquet(path).filter(F.col("day") == "2026-01-03")
-    plan = rd._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "day" in plan.split("PartitionFilters")[1][:80]
-    assert rd.count() == df.filter(F.col("day") == "2026-01-03").count()
-
-
 def test_zorder_interleave_and_binning(spark):
     from datetime import datetime, timezone
 

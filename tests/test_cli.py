@@ -37,15 +37,32 @@ filters:
 """
     p = tmp_path / "config.yaml"
     p.write_text(cfg_text)
+    # the reference's file loads unchanged: its document-store address
+    # (config.yaml:15) has no engine field and is ignored, and every other
+    # key keeps its value
+    from airstrik_py_spark.config import REFERENCE, EngineConfig, Geofence
+
     cfg = load_config(str(p))
-    assert cfg.home_lat == 35.7270309
-    assert cfg.remember_s == 60.0
+    assert cfg == EngineConfig(
+        home_lat=35.7270309,
+        home_lon=-78.695587,
+        think_ahead=60,
+        lookback_rows=10,
+        remember_s=60.0,
+        min_trip_length_s=90.0,
+        decimation_factor=15,
+        decimation_force_new_data=True,
+        utc_time_offset_h=-4,
+        print_top_planes=25,
+        json_speed_s=2.0,
+        kafka_address="broker:9092",
+        dump1090_dir=REFERENCE.dump1090_dir,
+        filters=(
+            Geofence("close", 10.0, 1000.0),
+            Geofence("tooclose", 5.0, 1000.0),
+        ),
+    )
     assert cfg.most_generous_dist_km == 10.0
-    assert [f.name for f in cfg.filters] == ["close", "tooclose"]
-    # config.yaml:12,15-16 drop-in fidelity
-    assert cfg.json_speed_s == 2.0
-    assert cfg.mongo_address == "10.0.0.5:27017"
-    assert cfg.kafka_address == "broker:9092"
 
 
 def test_reference_profile_uses_full_precision_home():

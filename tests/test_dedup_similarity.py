@@ -2,10 +2,37 @@
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from airstrik_py_spark.operators import dedup as D
 from airstrik_py_spark.operators import similarity as SIM
+
+
+# The rendered signature string: the reference the packed block ints of
+# operators/dedup.py are checked against.
+def simhash_signature(docs: DataFrame) -> DataFrame:
+    """64-bit SimHash over whitespace tokens: bit j set when the sum over
+    token occurrences of ±1 is positive; the ±1 for bit j reads md5 hex
+    nibble j//4 at nibble-bit (3 - j%4) — the HEX_BIT_SETS convention.
+    The '0'/'1' string renders from the block-int core (one shift+mask
+    per bit, codegen) — same strings as the direct concat, single source
+    of truth for the fold."""
+    bi = D._simhash_block_ints(docs)
+    block_w = D.SIMHASH_BITS // D.SIMHASH_BLOCKS
+    sig = F.concat(
+        *[
+            F.when(
+                F.shiftright(
+                    F.col(f"b{j // block_w}"), block_w - 1 - (j % block_w)
+                ).bitwiseAND(F.lit(1))
+                == 1,
+                F.lit("1"),
+            ).otherwise(F.lit("0"))
+            for j in range(D.SIMHASH_BITS)
+        ]
+    )
+    return bi.select("doc_id", sig.alias("sig"))
 
 
 def _docs(spark):
@@ -227,15 +254,15 @@ def _clustered_vecs(spark):
 def test_kmeans_cells_separates_clusters(spark):
     cells = {
         r["vec_id"]: r["cell"]
-        for r in SIM.kmeans_cells(_clustered_vecs(spark), n_cells=2, iters=2, dim=4).collect()
+        for r in SIM.kmeans_fit(_clustered_vecs(spark), n_cells=2, iters=2, dim=4)[0].collect()
     }
     assert {cells[i] for i in (0, 2, 4, 6)} == {0}
     assert {cells[i] for i in (1, 3, 5, 7)} == {1}
 
 
 def test_kmeans_cells_deterministic(spark):
-    a = SIM.kmeans_cells(_clustered_vecs(spark), n_cells=2, iters=2, dim=4).collect()
-    b = SIM.kmeans_cells(_clustered_vecs(spark), n_cells=2, iters=2, dim=4).collect()
+    a = SIM.kmeans_fit(_clustered_vecs(spark), n_cells=2, iters=2, dim=4)[0].collect()
+    b = SIM.kmeans_fit(_clustered_vecs(spark), n_cells=2, iters=2, dim=4)[0].collect()
     assert sorted((r["vec_id"], r["cell"]) for r in a) == sorted(
         (r["vec_id"], r["cell"]) for r in b
     )
@@ -650,7 +677,7 @@ def test_simhash_block_ints_match_signature_string(spark):
     packed 64-bit long (xor+popcount hamming).  Pin the packing against
     the rendered '0'/'1' signature string: bit j of the string must equal
     bit (15 - j%16) of block int j//16, for every doc."""
-    sig = {r["doc_id"]: r["sig"] for r in D.simhash_signature(_docs(spark)).collect()}
+    sig = {r["doc_id"]: r["sig"] for r in simhash_signature(_docs(spark)).collect()}
     blocks = {
         r["doc_id"]: [r[f"b{b}"] for b in range(D.SIMHASH_BLOCKS)]
         for r in D._simhash_block_ints(_docs(spark)).collect()
@@ -666,7 +693,7 @@ def test_simhash_block_ints_match_signature_string(spark):
 def test_simhash_pairs_hamming_matches_string_hamming(spark):
     """r16: xor+bit_count hamming over the packed longs must equal the
     character-wise signature-string distance for every emitted pair."""
-    sig = {r["doc_id"]: r["sig"] for r in D.simhash_signature(_docs(spark)).collect()}
+    sig = {r["doc_id"]: r["sig"] for r in simhash_signature(_docs(spark)).collect()}
     for r in D.simhash_pairs(_docs(spark), max_hamming=64).collect():
         want = sum(
             1 for x, y in zip(sig[r["doc_a"]], sig[r["doc_b"]]) if x != y

@@ -1,9 +1,10 @@
-"""WGS-84 geodesic lane (VERDICT r10 #7): Karney 2013 and Vincenty 1975
-are implemented independently (functions/geodesic.py shares no math
-between them) — their mutual agreement IS the correctness evidence, since
-no third-party geodesic package is installed to compare
-against.  Sub-millimetre agreement over random pairs would require the
-same wrong series coefficients in two unrelated formulations."""
+"""WGS-84 geodesic lane (VERDICT r10 #7): Karney 2013 (functions/
+geodesic.py) and Vincenty 1975 (below, the test-side reference) are
+implemented independently and share no math — their mutual agreement IS
+the correctness evidence, since no third-party geodesic package is
+installed to compare against.  Sub-millimetre agreement over random pairs
+would require the same wrong series coefficients in two unrelated
+formulations."""
 
 from __future__ import annotations
 
@@ -13,11 +14,155 @@ import random
 import pytest
 
 from airstrik_py_spark.functions.geodesic import (
+    _EP2,
     WGS84_A_M,
     WGS84_B_M,
+    WGS84_F,
+    _karney_direct_prefix,
+    _karney_direct_step,
     karney_inverse_km,
-    vincenty_inverse_km,
 )
+
+
+# The scalar direct problem: the composition geodesic_dest_pandas_udf
+# evaluates per row, with the prefix computed fresh on every call.
+def karney_direct(
+    lat1: float, lon1: float, azi1_deg: float, s_km: float
+) -> tuple[float, float]:
+    """WGS-84 direct (destination-point) problem, Karney 2013 §3: from
+    (lat1, lon1) travel s_km along initial azimuth azi1_deg (clockwise from
+    north).  Returns (lat2, lon2) with lon2 normalized to [-180, 180].
+    Closed form — no iteration: sigma2 comes from the published inverse
+    series (eq. 20-21), not from root-finding."""
+    return _karney_direct_step(_karney_direct_prefix(lat1, azi1_deg), lon1, s_km)
+
+
+# --- Vincenty 1975 ----------------------------------------------------------
+
+
+def vincenty_inverse_km(
+    lat1: float, lon1: float, lat2: float, lon2: float, max_iter: int = 200
+) -> float:
+    """WGS-84 geodesic distance (km), Vincenty inverse formula.  Raises
+    ValueError on non-convergence (near-antipodal pairs — Karney covers
+    those)."""
+    if lat1 == lat2 and (lon1 - lon2) % 360.0 == 0.0:
+        return 0.0
+    u1 = math.atan((1.0 - WGS84_F) * math.tan(math.radians(lat1)))
+    u2 = math.atan((1.0 - WGS84_F) * math.tan(math.radians(lat2)))
+    big_l = math.radians(math.remainder(lon2 - lon1, 360.0))
+    su1, cu1 = math.sin(u1), math.cos(u1)
+    su2, cu2 = math.sin(u2), math.cos(u2)
+    lam = big_l
+    for _ in range(max_iter):
+        sl, cl = math.sin(lam), math.cos(lam)
+        sin_sigma = math.hypot(cu2 * sl, cu1 * su2 - su1 * cu2 * cl)
+        if sin_sigma == 0.0:
+            return 0.0  # coincident
+        cos_sigma = su1 * su2 + cu1 * cu2 * cl
+        sigma = math.atan2(sin_sigma, cos_sigma)
+        sin_alpha = cu1 * cu2 * sl / sin_sigma
+        cos2_alpha = 1.0 - sin_alpha * sin_alpha
+        cos_2sm = (
+            cos_sigma - 2.0 * su1 * su2 / cos2_alpha if cos2_alpha != 0.0 else 0.0
+        )
+        c = WGS84_F / 16.0 * cos2_alpha * (4.0 + WGS84_F * (4.0 - 3.0 * cos2_alpha))
+        lam_prev = lam
+        lam = big_l + (1.0 - c) * WGS84_F * sin_alpha * (
+            sigma
+            + c
+            * sin_sigma
+            * (cos_2sm + c * cos_sigma * (-1.0 + 2.0 * cos_2sm * cos_2sm))
+        )
+        if abs(lam - lam_prev) < 1e-13:
+            break
+    else:
+        raise ValueError("vincenty failed to converge (near-antipodal?)")
+    u2_ = cos2_alpha * _EP2
+    a = 1.0 + u2_ / 16384.0 * (4096.0 + u2_ * (-768.0 + u2_ * (320.0 - 175.0 * u2_)))
+    b = u2_ / 1024.0 * (256.0 + u2_ * (-128.0 + u2_ * (74.0 - 47.0 * u2_)))
+    d_sigma = (
+        b
+        * sin_sigma
+        * (
+            cos_2sm
+            + b
+            / 4.0
+            * (
+                cos_sigma * (-1.0 + 2.0 * cos_2sm * cos_2sm)
+                - b
+                / 6.0
+                * cos_2sm
+                * (-3.0 + 4.0 * sin_sigma * sin_sigma)
+                * (-3.0 + 4.0 * cos_2sm * cos_2sm)
+            )
+        )
+    )
+    return WGS84_B_M * a * (sigma - d_sigma) / 1000.0
+
+
+def vincenty_direct(
+    lat1: float, lon1: float, azi1_deg: float, s_km: float, max_iter: int = 200
+) -> tuple[float, float]:
+    """WGS-84 direct problem, Vincenty 1975 (the iterative sigma form).
+    Independent of karney_direct — shares no series or intermediate with
+    it, so their mutual agreement cross-validates both."""
+    s = s_km * 1000.0
+    alpha1 = math.radians(azi1_deg)
+    sa1, ca1 = math.sin(alpha1), math.cos(alpha1)
+    tan_u1 = (1.0 - WGS84_F) * math.tan(math.radians(lat1))
+    cu1 = 1.0 / math.sqrt(1.0 + tan_u1 * tan_u1)
+    su1 = tan_u1 * cu1
+    sigma1 = math.atan2(tan_u1, ca1)
+    sin_alpha = cu1 * sa1
+    cos2_alpha = 1.0 - sin_alpha * sin_alpha
+    u2 = cos2_alpha * _EP2
+    a = 1.0 + u2 / 16384.0 * (4096.0 + u2 * (-768.0 + u2 * (320.0 - 175.0 * u2)))
+    b = u2 / 1024.0 * (256.0 + u2 * (-128.0 + u2 * (74.0 - 47.0 * u2)))
+    sigma = s / (WGS84_B_M * a)
+    for _ in range(max_iter):
+        two_sm = 2.0 * sigma1 + sigma
+        cos_2sm = math.cos(two_sm)
+        ss, cs = math.sin(sigma), math.cos(sigma)
+        d_sigma = (
+            b
+            * ss
+            * (
+                cos_2sm
+                + b
+                / 4.0
+                * (
+                    cs * (-1.0 + 2.0 * cos_2sm * cos_2sm)
+                    - b
+                    / 6.0
+                    * cos_2sm
+                    * (-3.0 + 4.0 * ss * ss)
+                    * (-3.0 + 4.0 * cos_2sm * cos_2sm)
+                )
+            )
+        )
+        sigma_prev = sigma
+        sigma = s / (WGS84_B_M * a) + d_sigma
+        if abs(sigma - sigma_prev) < 1e-13:
+            break
+    else:
+        raise ValueError("vincenty direct failed to converge")
+    ss, cs = math.sin(sigma), math.cos(sigma)
+    cos_2sm = math.cos(2.0 * sigma1 + sigma)
+    lat2 = math.degrees(
+        math.atan2(
+            su1 * cs + cu1 * ss * ca1,
+            (1.0 - WGS84_F)
+            * math.hypot(sin_alpha, su1 * ss - cu1 * cs * ca1),
+        )
+    )
+    lam = math.atan2(ss * sa1, cu1 * cs - su1 * ss * ca1)
+    c = WGS84_F / 16.0 * cos2_alpha * (4.0 + WGS84_F * (4.0 - 3.0 * cos2_alpha))
+    big_l = lam - (1.0 - c) * WGS84_F * sin_alpha * (
+        sigma + c * ss * (cos_2sm + c * cs * (-1.0 + 2.0 * cos_2sm * cos_2sm))
+    )
+    lon2 = math.remainder(lon1 + math.degrees(big_l), 360.0)
+    return lat2, lon2
 
 
 def test_karney_vincenty_mutual_agreement_fixture_ranges():
@@ -139,11 +284,6 @@ def test_direct_problem_mutual_agreement():
     Vincenty-1975 direct (iterative sigma) are independent implementations
     — mutual agreement < 0.1 mm over random (origin, azimuth, distance)
     cross-validates both, same pattern as the inverse pair."""
-    from airstrik_py_spark.functions.geodesic import (
-        karney_direct,
-        vincenty_direct,
-    )
-
     rng = random.Random(17)
     for _ in range(300):
         lat1 = rng.uniform(-80, 80)
@@ -160,8 +300,6 @@ def test_direct_problem_mutual_agreement():
 
 
 def test_direct_inverse_roundtrip_and_closed_forms():
-    from airstrik_py_spark.functions.geodesic import karney_direct
-
     rng = random.Random(19)
     for _ in range(200):
         lat1 = rng.uniform(-80, 80)
@@ -182,10 +320,7 @@ def test_direct_inverse_roundtrip_and_closed_forms():
 def test_dest_pandas_udf_matches_scalar(spark):
     from pyspark.sql import functions as F
 
-    from airstrik_py_spark.functions.geodesic import (
-        geodesic_dest_pandas_udf,
-        karney_direct,
-    )
+    from airstrik_py_spark.functions.geodesic import geodesic_dest_pandas_udf
 
     rows = [
         (35.7, -78.7, 123.0, 42.5),
@@ -212,10 +347,7 @@ def test_dest_pandas_udf_prefix_memo_bitexact(spark):
     operation and its order."""
     from pyspark.sql import functions as F
 
-    from airstrik_py_spark.functions.geodesic import (
-        geodesic_dest_pandas_udf,
-        karney_direct,
-    )
+    from airstrik_py_spark.functions.geodesic import geodesic_dest_pandas_udf
 
     rows = [(35.727, -78.94, 77.5, 0.35 * t) for t in range(60)]
     rows += [(35.727, -78.94, 191.25, 0.8 * t) for t in range(10)]

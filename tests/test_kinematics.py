@@ -67,15 +67,3 @@ def test_latest_per_key(spark):
     got = {r["hex"]: (r["lat"], r["flight"]) for r in out.collect()}
     assert got["a"] == (35.90, None)  # value AT latest ts, not last non-null
     assert got["b"] == (36.00, "UAL2")
-
-
-def test_with_kinematics_composition(spark):
-    """The composed helper equals dedup -> heading -> speed -> distance."""
-    manual = K.with_distance_home(
-        K.with_calc_speed(K.with_calc_heading(K.dedup_consecutive(_fixture(spark))), REFERENCE),
-        REFERENCE,
-    )
-    composed = K.with_kinematics(_fixture(spark), REFERENCE)
-    a = sorted(map(tuple, manual.collect()))
-    b = sorted(map(tuple, composed.collect()))
-    assert a == b

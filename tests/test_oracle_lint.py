@@ -97,8 +97,8 @@ def test_karney_direct_oracle_matches_python_scalar():
     (hypot, remainder)."""
     import duckdb
 
-    from airstrik_py_spark.functions.geodesic import karney_direct
     from airstrik_py_spark.oracle.exprs import dead_reckoning_exact_ctes
+    from tests.test_geodesic import karney_direct
 
     ctes = dead_reckoning_exact_ctes(think_ahead=4)
     d = duckdb.connect()

@@ -1,20 +1,16 @@
-"""Wire-contract tests for the GUARDED sinks + the S2 decoder adapter
-(VERDICT r10 #4 and #6).
+"""Wire-contract test for the Kafka sink (VERDICT r10 #4).
 
-Mongo/Kafka services can't run in this container, so the writer CHAIN is
-captured with a recording stub patched over DataFrame.write: the tests
-pin exactly what write_kafka / write_store_mongo would put on the wire —
-format, options, save mode, and the full record content (which for Kafka
-must be the kafka_records golden bytes).  A drift in either the payload
-serialization or the writer wiring fails here without any broker.
+No broker runs under the tests, so the writer CHAIN is captured with a
+recording stub patched over DataFrame.write: the test pins exactly what
+write_kafka would put on the wire — format, options and the full record
+content, which must be the kafka_records golden bytes.  A drift in either
+the payload serialization or the writer wiring fails here without any
+broker.
 """
 
 from __future__ import annotations
 
 import json
-import subprocess
-import sys
-import time
 
 import pyspark.sql
 import pytest
@@ -33,7 +29,6 @@ class _RecordingWriter:
         self.df = df
         self.fmt = None
         self.opts = {}
-        self.save_mode = None
 
     def format(self, fmt):
         self.fmt = fmt
@@ -41,10 +36,6 @@ class _RecordingWriter:
 
     def option(self, k, v):
         self.opts[k] = v
-        return self
-
-    def mode(self, m):
-        self.save_mode = m
         return self
 
     def save(self):
@@ -94,82 +85,3 @@ def test_write_kafka_wire(spark, capture_writes):
     assert "eta" in json.loads(recs["airstrik-warning"]["value"])
     assert "eta" not in json.loads(recs["airstrik-alert"]["value"])
 
-
-def test_write_store_mongo_wire(spark, capture_writes, monkeypatch):
-    """write_store_mongo's writer chain: mongodb format, append mode,
-    connection options, and the UNTOUCHED document frame (the nested
-    trip_documents shape maps 1:1 to BSON)."""
-    monkeypatch.setattr(sinks, "MONGO_CONNECTOR_AVAILABLE", True)
-    df = spark.createDataFrame([(1, "x")], "a long, b string")
-    sinks.write_store_mongo(df, "mongodb://h:27017", "airstrik", "flight_records")
-    assert len(capture_writes) == 1
-    w = capture_writes[0]
-    assert w.fmt == "mongodb"
-    assert w.save_mode == "append"
-    assert w.opts == {
-        "connection.uri": "mongodb://h:27017",
-        "database": "airstrik",
-        "collection": "flight_records",
-    }
-    assert [r.asDict() for r in w.rows] == [{"a": 1, "b": "x"}]
-
-
-def test_write_store_mongo_guard_without_connector(spark):
-    df = spark.createDataFrame([(1,)], "a long")
-    with pytest.raises(NotImplementedError, match="mongo-spark-connector"):
-        sinks.write_store_mongo(df, "mongodb://h", "db", "c")
-
-
-# --- S2 DecoderAdapter lifecycle (VERDICT r10 #6) -------------------------
-
-
-def _wait_flag(adapter, want, timeout=5.0):
-    t0 = time.time()
-    while time.time() - t0 < timeout:
-        if adapter.proc.poll() is not None:
-            adapter._watch.join(timeout=2.0)
-            return adapter.crashed == want
-        time.sleep(0.02)
-    return False
-
-
-def test_decoder_adapter_crash_sets_flag(tmp_path):
-    """Reference end_process parity (airstrik.py:71-74): NONZERO exit ->
-    crashed; the engine's feed loop uses the flag to bail out."""
-    from airstrik_py_spark.sources.snapshot import DecoderAdapter
-
-    a = DecoderAdapter([sys.executable, "-c", "import sys; sys.exit(3)"],
-                       str(tmp_path))
-    a.start()
-    assert _wait_flag(a, want=True)
-    assert a.crashed is True
-
-
-def test_decoder_adapter_clean_exit_not_crash(tmp_path):
-    """airstrik.py:74 `if p.returncode:` — a zero exit never sets the flag."""
-    from airstrik_py_spark.sources.snapshot import DecoderAdapter
-
-    a = DecoderAdapter([sys.executable, "-c", "pass"], str(tmp_path))
-    a.start()
-    assert _wait_flag(a, want=False)
-    assert a.crashed is False
-
-
-def test_decoder_adapter_stop_terminates_without_crash(tmp_path):
-    """stop() mirrors the reference's atexit terminate (airstrik.py:70):
-    intentional shutdown terminates the process and is NOT a crash."""
-    from airstrik_py_spark.sources.snapshot import DecoderAdapter
-
-    a = DecoderAdapter([sys.executable, "-c", "import time; time.sleep(60)"],
-                       str(tmp_path))
-    a.start()
-    assert a.proc.poll() is None  # actually running
-    a.stop()
-    try:
-        a.proc.wait(timeout=5)
-    except subprocess.TimeoutExpired:
-        a.proc.kill()
-        raise
-    a._watch.join(timeout=2.0)
-    assert a.crashed is False
-    assert a.proc.poll() is not None

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from airstrik_py_spark.config import EngineConfig
@@ -12,7 +13,7 @@ from airstrik_py_spark.operators import kinematics as K
 from airstrik_py_spark.operators import sessions as S
 from airstrik_py_spark.operators.decimation import decimate
 from airstrik_py_spark.repl import Repl
-from airstrik_py_spark.sinks import kafka_records, write_csv, write_json, write_store
+from airstrik_py_spark.sinks import kafka_records, write_csv, write_json
 from tests.conftest import obs_rows
 
 BASE = 1700000000.0
@@ -118,7 +119,7 @@ def test_store_roundtrip(spark, tmp_path):
     sess = S.with_session_id(K.with_distance_home(_obs(spark), CFG), CFG)
     trips = S.trips(sess, CFG)
     out = str(tmp_path / "store")
-    write_store(trips, out)
+    trips.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     assert back.count() == trips.count()
     assert set(back.columns) == set(trips.columns)
@@ -271,6 +272,20 @@ def test_repl_dispatch(spark, tmp_path):
     found = repl.execute("search lat>35.74 & dump " + str(tmp_path / "dump"))[0]
     assert found.count() == 1  # plane a matches
     assert spark.read.json(str(tmp_path / "dump")).count() > 0
+
+
+@pytest.mark.parametrize(
+    "line", ["drop", "search lat>35.74 & dump", "list & "], ids=["drop", "dump", "empty"]
+)
+def test_repl_usage_errors(spark, line):
+    """A missing argument or an empty statement is a ValueError with a
+    usage message (which `repl --command` prints), not an IndexError or a
+    tuple-unpacking error."""
+    obs = _obs(spark)
+    sess = S.with_session_id(K.with_distance_home(obs, CFG), CFG)
+    repl = Repl(spark, obs, S.trips(sess, CFG))
+    with pytest.raises(ValueError, match=r"^(usage: |empty statement)"):
+        repl.execute(line)
 
 
 def test_repl_use_and_reset(spark):
@@ -440,8 +455,6 @@ def test_repl_list_variants_packet_exit(spark):
     """dbread parity: `list db` lists databases, `list db/<name>` lists
     that database's tables, `packet` is the reference's no-op stub, and
     `exit` raises SystemExit like dbread.py:187."""
-    import pytest
-
     obs = _obs(spark)
     sess = S.with_session_id(K.with_distance_home(obs, CFG), CFG)
     trips = S.trips(sess, CFG)
@@ -467,7 +480,7 @@ def test_store_schema_evolution_merge(spark, tmp_path):
     """A store written in two epochs — legacy (with commentary) and
     current (without) — must read back as ONE schema with NULLs where
     the column is absent, mirroring dbread's tolerance of both layouts."""
-    from airstrik_py_spark.sinks import read_store, write_store
+    from airstrik_py_spark.sinks import read_store
 
     legacy = _obs(spark).withColumn("commentary", F.lit("old collector"))
     sess_l = S.with_session_id(K.with_distance_home(legacy, CFG), CFG)
@@ -478,8 +491,8 @@ def test_store_schema_evolution_merge(spark, tmp_path):
     trips_p = S.trips(sess_p, CFG)
 
     store = str(tmp_path / "evolving_store")
-    write_store(trips_l, store, mode="overwrite")
-    write_store(trips_p, store, mode="append")
+    trips_l.write.mode("overwrite").parquet(store)
+    trips_p.write.mode("append").parquet(store)
 
     back = read_store(spark, store)
     assert "commentary" in back.columns

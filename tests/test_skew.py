@@ -1,72 +1,14 @@
-"""Salted aggregation / join equivalence on a deliberately skewed key."""
+"""AQE's runtime skew-join handling on a deliberately skewed key."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from airstrik_py_spark.operators.skew import salted_agg, salted_broadcast_join
-
-
-def _skewed(spark):
-    # 10k rows for key 'hot', 10 rows each for 5 cold keys
-    return spark.range(10050).select(
-        F.when(F.col("id") < 10000, F.lit("hot"))
-        .otherwise(F.concat(F.lit("cold"), (F.col("id") % 5).cast("string")))
-        .alias("k"),
-        (F.col("id") % 97).cast("double").alias("v"),
-    )
-
-
-def test_salted_agg_equals_direct(spark):
-    df = _skewed(spark)
-    direct = {
-        (r["k"]): (r["s"], r["n"], r["mn"], r["mx"])
-        for r in df.groupBy("k")
-        .agg(
-            F.sum("v").alias("s"),
-            F.count("v").alias("n"),
-            F.min("v").alias("mn"),
-            F.max("v").alias("mx"),
-        )
-        .collect()
-    }
-    salted = {
-        (r["k"]): (r["s"], r["n"], r["mn"], r["mx"])
-        for r in salted_agg(
-            df,
-            ["k"],
-            {"s": ("v", "sum"), "n": ("v", "count"), "mn": ("v", "min"), "mx": ("v", "max")},
-        ).collect()
-    }
-    assert salted == direct
-
-
-def test_salted_agg_rejects_nonalgebraic(spark):
-    import pytest
-
-    with pytest.raises(ValueError, match="non-algebraic"):
-        salted_agg(_skewed(spark), ["k"], {"d": ("v", "countDistinct")})
-
-
-def test_salted_broadcast_join_equals_plain(spark):
-    big = _skewed(spark)
-    dim = spark.createDataFrame(
-        [("hot", "H"), ("cold0", "C0"), ("cold3", "C3")], "k string, name string"
-    )
-    plain = sorted(
-        (r["k"], r["v"], r["name"]) for r in big.join(dim, "k").collect()
-    )
-    salted = sorted(
-        (r["k"], r["v"], r["name"])
-        for r in salted_broadcast_join(big, dim, "k").collect()
-    )
-    assert salted == plain
-
 
 def test_aqe_splits_skewed_join(spark):
     """AQE's runtime skew-join handling must kick in on a hot key when the
-    split thresholds are reachable — the zero-code-change path that
-    complements the explicit salting utilities at 100 TB."""
+    split thresholds are reachable — the zero-code-change path for hot
+    join keys at 100 TB."""
     confs = {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
