@@ -52,15 +52,18 @@ def _trips(obs, cfg):
     return S.filter_min_trip_length(S.trips_with_asof(sess, cfg), cfg)
 
 
-def trigger_kwargs(cfg, once: bool) -> dict:
-    """Micro-batch cadence: --once -> drain-and-exit; json_speed > 0 ->
-    trigger(processingTime=...) (config.yaml:12 / airstrik.py:86 sets the
-    snapshot update period); 0 -> as fast as possible (default trigger)."""
+def trigger_kwargs(cfg, once: bool, trips: bool = False) -> dict:
+    """Micro-batch cadence: --once -> drain-and-exit for both queries.  Live,
+    the alarm query follows json_speed (config.yaml:12 / airstrik.py:86 sets
+    the snapshot update period): > 0 -> trigger(processingTime=...), 0 -> as
+    fast as possible (default trigger).  The live trip query (`trips=True`)
+    wakes once per `remember` whatever json_speed is: a session closes only
+    after that much silence (airstrik.py:482), so a closed trip reaches the
+    store at most `remember` seconds after its watermark close."""
     if once:
         return {"availableNow": True}
-    if cfg.json_speed_s > 0:
-        return {"processingTime": f"{cfg.json_speed_s} seconds"}
-    return {}
+    period_s = cfg.remember_s if trips else cfg.json_speed_s
+    return {"processingTime": f"{period_s} seconds"} if period_s > 0 else {}
 
 
 def _with_trigger(writer, kwargs: dict):
@@ -98,7 +101,7 @@ def cmd_run(args) -> None:
     # ≙ database[args.database_out] (airstrik.py:649-650): the trip store
     # lands under <out>/<database-out>
     store = os.path.join(args.out, args.database_out)
-    trig = trigger_kwargs(cfg, bool(args.once))
+    once = bool(args.once)
     # Each micro-batch's files are listed again in getBatch; past the
     # threshold (32 paths by default) Spark does that in a distributed job
     # with one task per file, which took seconds per query on a 300-file
@@ -112,7 +115,8 @@ def cmd_run(args) -> None:
         spark, "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
     ):
         alarms = _with_trigger(
-            stream.writeStream.foreachBatch(alarm_foreach_batch(cfg, alarm_sink)), trig
+            stream.writeStream.foreachBatch(alarm_foreach_batch(cfg, alarm_sink)),
+            trigger_kwargs(cfg, once),
         ).start()
         # One state partition for the trip query: state commits cost per
         # partition per batch, and one receiver's open sessions are few —
@@ -120,12 +124,16 @@ def cmd_run(args) -> None:
         # backlog drained as one batch at 3,591.  The count binds when the
         # query starts (start() clones the session conf and the checkpoint
         # keeps it), so the block only covers start(); the alarm query keeps
-        # the CPU-sized count.
+        # the CPU-sized count.  Live, the trip query wakes once per
+        # `remember` (trigger_kwargs): per snapshot only the alarm batch
+        # runs, not also a trip data batch and a trip no-data batch
+        # competing with it for the CPU, and the session fold gives the same
+        # trips however the snapshots fall into batches.
         with session_conf(spark, "spark.sql.shuffle.partitions", "1"):
             trips_q = _with_trigger(
                 stream_trips(read_snapshot_stream(spark, _landing(args, cfg)), cfg)
                 .writeStream.foreachBatch(foreach_batch_idempotent_parquet(store)),
-                trig,
+                trigger_kwargs(cfg, once, trips=True),
             ).start()
         # Wait on both: whichever query fails first ends `run` with its
         # error and stops the survivor; --once returns once both have

@@ -27,7 +27,7 @@ ab ', ' a  a  a ' -> ' aa  a ' — greedy leftmost, exactly BPE's rule).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 BPE_ROUNDS = 3

@@ -4,7 +4,7 @@ enrichment, F2 geofence match, W6 alarm transitions, F8 first pair."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airstrik_py_spark.config import TESTDATA

@@ -101,6 +101,14 @@ def test_trigger_kwargs_from_json_speed():
     assert trigger_kwargs(EngineConfig(json_speed_s=2.0), once=True) == {
         "availableNow": True
     }
+    # live trips wake once per `remember`, whatever json_speed is; --once
+    # drains both queries
+    for speed in (0.0, 2.0):
+        cfg = EngineConfig(json_speed_s=speed, remember_s=45.0)
+        assert trigger_kwargs(cfg, once=False, trips=True) == {
+            "processingTime": "45.0 seconds"
+        }
+        assert trigger_kwargs(cfg, once=True, trips=True) == {"availableNow": True}
 
 
 def _one_plane_tape(tape) -> None:
@@ -314,3 +322,91 @@ print('OK')
     )
     assert res.returncode == 0, res.stderr[-3000:]
     assert "OK" in res.stdout
+
+
+def test_live_run_wakes_trip_query_once_per_remember(tmp_path):
+    """Live, the alarm query answers each snapshot as it lands, while the
+    trip query, triggered once per `remember` (60 s), runs at most its
+    start batch and one no-data batch: a snapshot costs one micro-batch,
+    not an alarm batch plus two trip batches."""
+    tape = tmp_path / "tape"
+    os.makedirs(tape)
+    code = f"""
+import argparse, json, os, threading, time
+from pyspark.sql.streaming import StreamingQueryListener
+import airstrik_py_spark.__main__ as cli
+
+TAPE = {str(tape)!r}
+
+class Listener(StreamingQueryListener):
+    def __init__(self):
+        self.progress = []
+        self.lock = threading.Lock()
+    def onQueryStarted(self, e): pass
+    def onQueryProgress(self, e):
+        with self.lock: self.progress.append(json.loads(e.progress.json))
+    def onQueryTerminated(self, e): pass
+    def split(self):
+        # the trip query is the one with a state operator
+        with self.lock: progress = list(self.progress)
+        trip_ids = {{p['id'] for p in progress if p['stateOperators']}}
+        return ([p for p in progress if p['id'] not in trip_ids],
+                [p for p in progress if p['id'] in trip_ids])
+
+def land(i):
+    # one plane inside the alert radius per snapshot, each under its own hex
+    snap = {{"now": {BASE} + 2 * i, "aircraft": [{{"hex": f"h{{i}}", "flight": "X",
+            "lat": 35.75, "lon": -78.7, "alt_geom": 500.0, "seen": 0.1}}]}}
+    tmp = os.path.join(os.path.dirname(TAPE), f".s{{i}}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(snap, f)
+    os.replace(tmp, os.path.join(TAPE, f"s{{i:03d}}.json"))
+
+def wait_for(cond, what, timeout_s=120):
+    deadline = time.time() + timeout_s
+    while not cond():
+        assert time.time() < deadline, what
+        time.sleep(0.05)
+
+listener, box = Listener(), {{}}
+get_spark = cli.get_spark
+def with_listener(*a, **k):
+    spark = box['spark'] = get_spark(*a, **k)
+    spark.streams.addListener(listener)
+    return spark
+cli.get_spark = with_listener
+
+def alarm_rows():
+    return sum(p['numInputRows'] for p in listener.split()[0])
+
+land(0)
+run = threading.Thread(target=cli.cmd_run, args=(argparse.Namespace(
+    landing_dir=TAPE, out={str(tmp_path / "out")!r}, config=None, once=False,
+    database_out='airstrikdb'),))
+run.start()
+wait_for(lambda: alarm_rows() == 1 and listener.split()[1], 'start batches')
+time.sleep(1.0)  # room for the trip query's no-data batch
+for i in range(1, 6):
+    land(i)
+    time.sleep(0.5)
+wait_for(lambda: alarm_rows() == 6, 'alarm rows')
+for q in box['spark'].streams.active:
+    q.stop()
+run.join(60)
+assert not run.is_alive()
+trip_batches = sorted({{p['batchId'] for p in listener.split()[1]}})
+assert trip_batches[-1] <= 1, trip_batches
+print('OK')
+"""
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert "OK" in res.stdout
+    alerted = {
+        line.split("'plane_hex': '")[1].split("'")[0]
+        for line in res.stdout.splitlines()
+        if line.startswith("[airstrik-alert]")
+    }
+    assert alerted == {f"h{i}" for i in range(6)}, res.stdout

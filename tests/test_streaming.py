@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from airstrik_py_spark.config import EngineConfig
@@ -145,20 +146,12 @@ def test_stream_equals_batch_trips(spark, tmp_path):
     assert len(want) == 5
 
 
-def test_stream_trips_independent_of_state_partitions(spark, tmp_path):
-    """The trip query's state partition count is a cost choice, not a
-    semantic one: the same tape drained in 5-file micro-batches gives the
-    same trips with 1 state partition (what `run` uses) and with 4, and
-    both equal the batch trips of the closed sessions."""
-    from airstrik_py_spark.__main__ import _trips
-    from airstrik_py_spark.sources.snapshot import SNAPSHOT_SCHEMA, flatten_snapshots
-    from airstrik_py_spark.streaming.pipeline import session_conf
-
-    tape = str(tmp_path / "parts_tape")
+def _gap_tape(tape: str) -> None:
+    """12 planes, a snapshot every 20 s; each plane sits out one block of
+    five snapshots in three (a 120 s gap > remember), so trips close
+    mid-tape and state carries across micro-batches.  A far-off sentinel
+    snapshot closes every real session."""
     os.makedirs(tape)
-    # 12 planes, a snapshot every 20 s; each plane sits out one block of
-    # five snapshots in three (a 120 s gap > remember), so trips close
-    # mid-tape and state carries across micro-batches
     for i in range(30):
         aircraft = [
             {"hex": f"p{j:02d}", "flight": f"F{j}", "lat": 35.6 + 0.01 * i + 0.02 * j,
@@ -170,35 +163,73 @@ def test_stream_trips_independent_of_state_partitions(spark, tmp_path):
             json.dump({"now": BASE + 20 * i, "aircraft": aircraft}, f)
     with open(os.path.join(tape, "snap_9999.json"), "w") as f:
         json.dump({"now": BASE + 10000, "aircraft": [{"hex": "zz", "lat": 0.0, "lon": 0.0, "seen": 0.1}]}, f)
-    cols = ["flight_id", "start_sec", "end_sec", "n_obs", "callsign", "closest_dist", "closest_sec"]
 
-    def drain(partitions: str, name: str) -> tuple[int, list]:
-        stream = flatten_snapshots(
-            spark.readStream.schema(SNAPSHOT_SCHEMA).option("maxFilesPerTrigger", 5).json(tape)
+
+_TRIP_COLS = ["flight_id", "start_sec", "end_sec", "n_obs", "callsign", "closest_dist", "closest_sec"]
+
+
+def _drain_trips(
+    spark, tape: str, name: str, max_files: int | None, partitions: str = "1"
+) -> tuple[int, list]:
+    """Drain `tape` through the trip query into a memory table, at most
+    `max_files` snapshots per micro-batch (None: all in one), with
+    `partitions` state partitions; returns (state partitions, sorted rows)."""
+    from airstrik_py_spark.sources.snapshot import SNAPSHOT_SCHEMA, flatten_snapshots
+    from airstrik_py_spark.streaming.pipeline import session_conf
+
+    reader = spark.readStream.schema(SNAPSHOT_SCHEMA)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    with session_conf(spark, "spark.sql.shuffle.partitions", partitions):
+        q = (
+            stream_trips(flatten_snapshots(reader.json(tape)), CFG)
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
         )
-        with session_conf(spark, "spark.sql.shuffle.partitions", partitions):
-            q = (
-                stream_trips(stream, CFG)
-                .writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
-        parts = q.lastProgress["stateOperators"][0]["numShufflePartitions"]
-        return parts, sorted(tuple(r) for r in spark.table(name).select(*cols).collect())
+    q.awaitTermination()
+    parts = q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+    return parts, sorted(tuple(r) for r in spark.table(name).select(*_TRIP_COLS).collect())
 
+
+def _batch_trips(spark, tape: str) -> list:
+    from airstrik_py_spark.__main__ import _trips
+
+    batch = _trips(read_snapshot_batch(spark, tape), CFG).filter("flight_id <> 'zz'")
+    return sorted(tuple(r) for r in batch.select(*_TRIP_COLS).collect())
+
+
+def test_stream_trips_independent_of_state_partitions(spark, tmp_path):
+    """The trip query's state partition count is a cost choice, not a
+    semantic one: the same tape drained in 5-file micro-batches gives the
+    same trips with 1 state partition (what `run` uses) and with 4, and
+    both equal the batch trips of the closed sessions."""
+    tape = str(tmp_path / "parts_tape")
+    _gap_tape(tape)
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    one = drain("1", "trips_parts_1")
-    four = drain("4", "trips_parts_4")
+    one = _drain_trips(spark, tape, "trips_parts_1", 5, "1")
+    four = _drain_trips(spark, tape, "trips_parts_4", 5, "4")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert (one[0], four[0]) == (1, 4)
     assert one[1] == four[1]
-
-    batch = _trips(read_snapshot_batch(spark, tape), CFG).filter("flight_id <> 'zz'")
-    assert one[1] == sorted(tuple(r) for r in batch.select(*cols).collect())
+    assert one[1] == _batch_trips(spark, tape)
     assert len(one[1]) > 12  # most planes close more than one trip
+
+
+@pytest.mark.parametrize("max_files", [1, 5, None], ids=["1", "5", "all"])
+def test_stream_trips_independent_of_batch_split(spark, tmp_path, max_files):
+    """Live `run` wakes the trip query once per `remember`, so one of its
+    micro-batches folds however many snapshots landed since the last: the
+    session fold must give the same trips whether the tape arrives one
+    snapshot, five snapshots or all snapshots per micro-batch, each equal
+    to the batch trips of the closed sessions."""
+    tape = str(tmp_path / "split_tape")
+    _gap_tape(tape)
+    _, rows = _drain_trips(spark, tape, f"trips_split_{max_files or 'all'}", max_files)
+    assert rows == _batch_trips(spark, tape)
+    assert len(rows) > 12
 
 
 def test_stream_store_rollup_equals_batch_daily_stats(spark, tmp_path):
