@@ -52,18 +52,15 @@ def _trips(obs, cfg):
     return S.filter_min_trip_length(S.trips_with_asof(sess, cfg), cfg)
 
 
-def trigger_kwargs(cfg, once: bool, trips: bool = False) -> dict:
-    """Micro-batch cadence: --once -> drain-and-exit for both queries.  Live,
-    the alarm query follows json_speed (config.yaml:12 / airstrik.py:86 sets
-    the snapshot update period): > 0 -> trigger(processingTime=...), 0 -> as
-    fast as possible (default trigger).  The live trip query (`trips=True`)
-    wakes once per `remember` whatever json_speed is: a session closes only
-    after that much silence (airstrik.py:482), so a closed trip reaches the
-    store at most `remember` seconds after its watermark close."""
+def trigger_kwargs(cfg, once: bool) -> dict:
+    """Micro-batch cadence: --once -> drain-and-exit; json_speed > 0 ->
+    trigger(processingTime=...) (config.yaml:12 / airstrik.py:86 sets the
+    snapshot update period); 0 -> as fast as possible (default trigger)."""
     if once:
         return {"availableNow": True}
-    period_s = cfg.remember_s if trips else cfg.json_speed_s
-    return {"processingTime": f"{period_s} seconds"} if period_s > 0 else {}
+    if cfg.json_speed_s > 0:
+        return {"processingTime": f"{cfg.json_speed_s} seconds"}
+    return {}
 
 
 def _with_trigger(writer, kwargs: dict):
@@ -101,7 +98,7 @@ def cmd_run(args) -> None:
     # ≙ database[args.database_out] (airstrik.py:649-650): the trip store
     # lands under <out>/<database-out>
     store = os.path.join(args.out, args.database_out)
-    once = bool(args.once)
+    trig = trigger_kwargs(cfg, bool(args.once))
     # Each micro-batch's files are listed again in getBatch; past the
     # threshold (32 paths by default) Spark does that in a distributed job
     # with one task per file, which took seconds per query on a 300-file
@@ -115,8 +112,7 @@ def cmd_run(args) -> None:
         spark, "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
     ):
         alarms = _with_trigger(
-            stream.writeStream.foreachBatch(alarm_foreach_batch(cfg, alarm_sink)),
-            trigger_kwargs(cfg, once),
+            stream.writeStream.foreachBatch(alarm_foreach_batch(cfg, alarm_sink)), trig
         ).start()
         # One state partition for the trip query: state commits cost per
         # partition per batch, and one receiver's open sessions are few —
@@ -125,15 +121,20 @@ def cmd_run(args) -> None:
         # query starts (start() clones the session conf and the checkpoint
         # keeps it), so the block only covers start(); the alarm query keeps
         # the CPU-sized count.  Live, the trip query wakes once per
-        # `remember` (trigger_kwargs): per snapshot only the alarm batch
-        # runs, not also a trip data batch and a trip no-data batch
-        # competing with it for the CPU, and the session fold gives the same
-        # trips however the snapshots fall into batches.
+        # `remember`, whatever json_speed is: a session closes only after
+        # that much silence (airstrik.py:482), so per snapshot only the
+        # alarm batch runs, not also a trip data batch and a trip no-data
+        # batch competing with it for the CPU, and the session fold gives
+        # the same trips however the snapshots fall into batches.  The
+        # costs: a closed trip reaches the store up to `remember` seconds
+        # later; a stop leaves the trips closed since the last wake-up
+        # unwritten; and a trip store that breaks after the start batch
+        # ends `run` only at the next wake-up.
         with session_conf(spark, "spark.sql.shuffle.partitions", "1"):
             trips_q = _with_trigger(
                 stream_trips(read_snapshot_stream(spark, _landing(args, cfg)), cfg)
                 .writeStream.foreachBatch(foreach_batch_idempotent_parquet(store)),
-                trigger_kwargs(cfg, once, trips=True),
+                trig if args.once else {"processingTime": f"{cfg.remember_s} seconds"},
             ).start()
         # Wait on both: whichever query fails first ends `run` with its
         # error and stops the survivor; --once returns once both have

@@ -101,14 +101,6 @@ def test_trigger_kwargs_from_json_speed():
     assert trigger_kwargs(EngineConfig(json_speed_s=2.0), once=True) == {
         "availableNow": True
     }
-    # live trips wake once per `remember`, whatever json_speed is; --once
-    # drains both queries
-    for speed in (0.0, 2.0):
-        cfg = EngineConfig(json_speed_s=speed, remember_s=45.0)
-        assert trigger_kwargs(cfg, once=False, trips=True) == {
-            "processingTime": "45.0 seconds"
-        }
-        assert trigger_kwargs(cfg, once=True, trips=True) == {"availableNow": True}
 
 
 def _one_plane_tape(tape) -> None:
@@ -326,9 +318,11 @@ print('OK')
 
 def test_live_run_wakes_trip_query_once_per_remember(tmp_path):
     """Live, the alarm query answers each snapshot as it lands, while the
-    trip query, triggered once per `remember` (60 s), runs at most its
-    start batch and one no-data batch: a snapshot costs one micro-batch,
-    not an alarm batch plus two trip batches."""
+    trip query, triggered once per `remember` (60 s) whatever json_speed
+    is, runs at most its start batch and one no-data batch: a snapshot
+    costs one micro-batch, not an alarm batch plus two trip batches.
+    `--once` drains both queries: see
+    test_run_once_lists_on_driver_and_sizes_trip_state."""
     tape = tmp_path / "tape"
     os.makedirs(tape)
     code = f"""
@@ -368,13 +362,16 @@ def wait_for(cond, what, timeout_s=120):
         assert time.time() < deadline, what
         time.sleep(0.05)
 
-listener, box = Listener(), {{}}
-get_spark = cli.get_spark
+listener, box, triggers = Listener(), {{}}, []
+get_spark, with_trigger = cli.get_spark, cli._with_trigger
 def with_listener(*a, **k):
     spark = box['spark'] = get_spark(*a, **k)
     spark.streams.addListener(listener)
     return spark
-cli.get_spark = with_listener
+def recording_trigger(writer, kwargs):
+    triggers.append(kwargs)
+    return with_trigger(writer, kwargs)
+cli.get_spark, cli._with_trigger = with_listener, recording_trigger
 
 def alarm_rows():
     return sum(p['numInputRows'] for p in listener.split()[0])
@@ -396,6 +393,8 @@ run.join(60)
 assert not run.is_alive()
 trip_batches = sorted({{p['batchId'] for p in listener.split()[1]}})
 assert trip_batches[-1] <= 1, trip_batches
+# alarms: the reference's json_speed 0 (default trigger); trips: remember
+assert triggers == [{{}}, {{'processingTime': '60.0 seconds'}}], triggers
 print('OK')
 """
     res = subprocess.run(

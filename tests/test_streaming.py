@@ -218,13 +218,14 @@ def test_stream_trips_independent_of_state_partitions(spark, tmp_path):
     assert len(one[1]) > 12  # most planes close more than one trip
 
 
-@pytest.mark.parametrize("max_files", [1, 5, None], ids=["1", "5", "all"])
+@pytest.mark.parametrize("max_files", [1, None], ids=["1", "all"])
 def test_stream_trips_independent_of_batch_split(spark, tmp_path, max_files):
     """Live `run` wakes the trip query once per `remember`, so one of its
     micro-batches folds however many snapshots landed since the last: the
     session fold must give the same trips whether the tape arrives one
-    snapshot, five snapshots or all snapshots per micro-batch, each equal
-    to the batch trips of the closed sessions."""
+    snapshot or all snapshots per micro-batch, each equal to the batch
+    trips of the closed sessions (five per micro-batch is
+    test_stream_trips_independent_of_state_partitions)."""
     tape = str(tmp_path / "split_tape")
     _gap_tape(tape)
     _, rows = _drain_trips(spark, tape, f"trips_split_{max_files or 'all'}", max_files)
