@@ -11,7 +11,7 @@ Structured Streaming for the live path.
 
 Layout (SURVEY.md §7):
   config.py               config.yaml semantics as a dataclass (§1.6)
-  session.py              SparkSession builder tuned for local[32] + cluster
+  session.py              SparkSession builder: local[<process CPUs>] + cluster
   functions/geo.py        haversine / bearing / forward-geodesic Column exprs
   functions/text.py       tokenize / quality / langid / fingerprint exprs
   functions/vector.py     cosine similarity over array<float> columns

@@ -44,14 +44,6 @@ def _batch_obs(spark, landing_dir):
     return obs
 
 
-def _trips(obs, cfg):
-    from airstrik_py_spark.operators import kinematics as K
-    from airstrik_py_spark.operators import sessions as S
-
-    sess = S.with_session_id(K.with_distance_home(obs, cfg), cfg)
-    return S.filter_min_trip_length(S.trips_with_asof(sess, cfg), cfg)
-
-
 def trigger_kwargs(cfg, once: bool) -> dict:
     """Micro-batch cadence: --once -> drain-and-exit; json_speed > 0 ->
     trigger(processingTime=...) (config.yaml:12 / airstrik.py:86 sets the
@@ -156,10 +148,11 @@ def cmd_run(args) -> None:
 def cmd_repl(args) -> None:
     cfg = _cfg(args)
     spark = get_spark("airstrik-repl")
+    from airstrik_py_spark.operators.sessions import trips_from_obs
     from airstrik_py_spark.repl import Repl
 
     obs = _batch_obs(spark, _landing(args, cfg))
-    repl = Repl(spark, obs, _trips(obs, cfg))
+    repl = Repl(spark, obs, trips_from_obs(obs, cfg))
     if args.command:
         try:
             for df in repl.execute(args.command):
@@ -189,9 +182,10 @@ def cmd_csvdump(args) -> None:
     from pyspark.sql import functions as F
 
     from airstrik_py_spark.operators import stats as ST
+    from airstrik_py_spark.operators.sessions import trips_from_obs
     from airstrik_py_spark.sinks import write_csv
 
-    trips = _trips(_batch_obs(spark, _landing(args, cfg)), cfg)
+    trips = trips_from_obs(_batch_obs(spark, _landing(args, cfg)), cfg)
     if args.mode == "trip":
         # csvdump.py:88-90 writes human-readable datetimes, not epochs
         def fmt(col):
@@ -202,7 +196,7 @@ def cmd_csvdump(args) -> None:
 
         out = trips.select(
             "flight_id",
-            F.coalesce("callsign").alias("flight_name"),
+            F.col("callsign").alias("flight_name"),
             F.round("asof_lat", 6).alias("lat"),
             F.round("asof_lon", 6).alias("lon"),
             F.round("asof_alt", 6).alias("alt_geom"),

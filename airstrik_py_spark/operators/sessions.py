@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from airstrik_py_spark.config import EngineConfig
-from airstrik_py_spark.operators.kinematics import key_window
+from airstrik_py_spark.operators.kinematics import key_window, with_distance_home
 from airstrik_py_spark.sources.tables import icao_dim
 
 
@@ -33,13 +33,16 @@ def with_session_id(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def _first_nonnull(value, ts_sec=None, event_id=None):
+def _first_nonnull(value):
     """Earliest non-null `value` by (ts_sec, event_id): min over a struct
     whose leading fields are the ordering — NULL rows drop out of min."""
-    ts_sec = F.col("ts_sec") if ts_sec is None else ts_sec
-    event_id = F.col("event_id") if event_id is None else event_id
     return F.min(
-        F.when(value.isNotNull(), F.struct(ts_sec.alias("t"), event_id.alias("e"), value.alias("v")))
+        F.when(
+            value.isNotNull(),
+            F.struct(
+                F.col("ts_sec").alias("t"), F.col("event_id").alias("e"), value.alias("v")
+            ),
+        )
     ).getField("v")
 
 
@@ -83,9 +86,9 @@ def _alarmed_row(cfg: EngineConfig):
         non-null altitude, vacuously true while no altitude has been seen
         (airstrik.py:272-275).
 
-    Returns (alarmed_col, ordered session window) — callers aggregate
-    F.max(alarmed_col) per session.  The window sort shares the hex
-    hash-exchange already present from sessionization: no extra shuffle."""
+    Returns the per-row flag that trip_aggs folds into the sticky
+    `alarmed`.  The window sort shares the hex hash-exchange already
+    present from sessionization: no extra shuffle."""
     sw = Window.partitionBy("hex", "session_id").orderBy("ts_sec", "event_id")
     run = sw.rowsBetween(Window.unboundedPreceding, 0)
     before = sw.rowsBetween(Window.unboundedPreceding, -1)
@@ -105,53 +108,52 @@ def _alarmed_row(cfg: EngineConfig):
     )
 
 
-def trips(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """A3 — fold each session into one trip row (airstrik.py:498-543):
-    bounds + A2 argmin-closest + A4 first callsign + sticky alarm flag.
-    `df` needs `distance` (W4) and `session_id` (W5).  Single groupBy —
-    map-side partial aggs.
+def _clean_flight():
+    # the reference strips every space from the callsign (airstrik.py:570-573)
+    return F.regexp_replace("flight", " ", "")
 
-    Legacy `commentary` pass-through (r6, VERDICT r4 #8): when the input
-    carries a `commentary` column (legacy stores — dbread.py:48 prints it
-    per trip; csvdump.py:89 skips it on export), the earliest non-null
-    value rides the same fold as the callsign; absent column, absent
-    output — non-legacy schemas are unchanged."""
-    clean_flight = F.regexp_replace("flight", " ", "")
-    closest = F.min(
+
+def _closest():
+    """A2 argmin: the (distance, ts_sec, event_id) minimum — first-wins
+    ties (airstrik.py:492-497)."""
+    return F.min(
         F.struct(
             F.col("distance").alias("d"),
             F.col("ts_sec").alias("t"),
             F.col("event_id").alias("e"),
         )
     )
-    extra = (
-        [_first_nonnull(F.col("commentary")).alias("commentary")]
-        if "commentary" in df.columns
-        else []
-    )
-    return (
-        df.withColumn("_alarmed_row", _alarmed_row(cfg))
-        .groupBy(F.col("hex").alias("flight_id"), "session_id")
-        .agg(
-            F.min("ts_sec").alias("start_sec"),
-            F.max("ts_sec").alias("end_sec"),
-            F.count("*").alias("n_obs"),
-            _first_nonnull(clean_flight).alias("callsign"),
-            closest.getField("d").alias("closest_dist"),
-            closest.getField("t").alias("closest_sec"),
-            F.max(F.coalesce(F.col("_alarmed_row"), F.lit(False))).alias("alarmed"),
-            *extra,
-        )
-    )
 
 
-def trips_with_asof(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """A3 + J2 in ONE shuffle: a session-scoped window computes the
+def trip_aggs(row_flag) -> list:
+    """The A2/A3/A4 trip fold every trip query shares (airstrik.py:498-543):
+    bounds, n_obs, first whitespace-stripped callsign, argmin-closest
+    (first-wins ties) and the sticky alarm flag, max over the per-row
+    `row_flag` (NULL counts as not alarmed)."""
+    closest = _closest()
+    return [
+        F.min("ts_sec").alias("start_sec"),
+        F.max("ts_sec").alias("end_sec"),
+        F.count("*").alias("n_obs"),
+        _first_nonnull(_clean_flight()).alias("callsign"),
+        closest.getField("d").alias("closest_dist"),
+        closest.getField("t").alias("closest_sec"),
+        F.max(F.coalesce(row_flag, F.lit(False))).alias("alarmed"),
+    ]
+
+
+def trips(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """A3 + J2 in ONE shuffle: fold each session into one trip row
+    (trip_aggs over the batch sticky flag _alarmed_row) plus the as-of
+    state at the closest approach.  `df` needs `distance` (W4) and
+    `session_id` (W5).  A session-scoped window computes the
     closest-approach cutoff per row, then a single groupBy folds the trip
     AND the as-of state conditioned on that cutoff.  As-of is OLDEST-wins
-    (see _asof_struct_before — reference quirk airstrik.py:505-508), emitted
-    as asof_{lat,lon,alt,flight,dist} value columns plus asof_*_sec entry
-    timestamps for the document sinks.
+    (see _asof_struct_before — reference quirk airstrik.py:505-508),
+    emitted as asof_{lat,lon,alt,flight,dist} value columns plus
+    asof_*_sec entry timestamps for the document sinks.  Callers that
+    project only the fold columns pay for neither: Catalyst prunes the
+    unused as-of aggregates and the cutoff window.
 
     Scale note: the hex hash-exchange introduced by with_session_id's window
     satisfies the (hex, session_id) window and groupBy distributions too
@@ -159,25 +161,11 @@ def trips_with_asof(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     no further exchange — verified via .explain: one Exchange for the whole
     sessionize->argmin->asof->fold chain."""
     session_w = Window.partitionBy("hex", "session_id")
-    closest_here = F.min(
-        F.struct(
-            F.col("distance").alias("d"),
-            F.col("ts_sec").alias("t"),
-            F.col("event_id").alias("e"),
-        )
-    ).over(session_w)
+    closest_here = _closest().over(session_w)
     with_cutoff = df.withColumn("closest_sec", closest_here.getField("t")).withColumn(
         "_alarmed_row", _alarmed_row(cfg)
     )
 
-    clean_flight = F.regexp_replace("flight", " ", "")
-    closest = F.min(
-        F.struct(
-            F.col("distance").alias("d"),
-            F.col("ts_sec").alias("t"),
-            F.col("event_id").alias("e"),
-        )
-    )
     cutoff = F.col("closest_sec")
     asof_cols = {
         "lat": _asof_struct_before(F.col("lat"), cutoff),
@@ -186,29 +174,24 @@ def trips_with_asof(df: DataFrame, cfg: EngineConfig) -> DataFrame:
         # the reference stores the whitespace-stripped callsign in
         # flight_name_id (airstrik.py:570-573) — the as-of scan sees the
         # cleaned value
-        "flight": _asof_struct_before(clean_flight, cutoff),
+        "flight": _asof_struct_before(_clean_flight(), cutoff),
         # the closure re-match (airstrik.py:524-535) uses write['distance'],
         # i.e. the as-of distance, NOT closest_dist
         "dist": _asof_struct_before(F.col("distance"), cutoff),
     }
+    # Legacy `commentary` pass-through (r6, VERDICT r4 #8): legacy stores
+    # carry it (dbread.py:48 prints it per trip; csvdump.py:89 skips it on
+    # export), and the earliest non-null value rides the same fold as the
+    # callsign; absent column, absent output.
     extra = (
         [_first_nonnull(F.col("commentary")).alias("commentary")]
         if "commentary" in df.columns
         else []
     )
-    agged = (
-        with_cutoff.groupBy(F.col("hex").alias("flight_id"), "session_id")
-        .agg(
-            F.min("ts_sec").alias("start_sec"),
-            F.max("ts_sec").alias("end_sec"),
-            F.count("*").alias("n_obs"),
-            _first_nonnull(clean_flight).alias("callsign"),
-            closest.getField("d").alias("closest_dist"),
-            closest.getField("t").alias("closest_sec"),
-            F.max(F.coalesce(F.col("_alarmed_row"), F.lit(False))).alias("alarmed"),
-            *extra,
-            *[s.alias(f"_asof_{k}") for k, s in asof_cols.items()],
-        )
+    agged = with_cutoff.groupBy(F.col("hex").alias("flight_id"), "session_id").agg(
+        *trip_aggs(F.col("_alarmed_row")),
+        *extra,
+        *[s.alias(f"_asof_{k}") for k, s in asof_cols.items()],
     )
     for k in asof_cols:
         agged = agged.withColumn(f"asof_{k}", F.col(f"_asof_{k}.v")).withColumn(
@@ -244,3 +227,10 @@ def enrich_icao(
         )
         .drop("icao_key", "icao_name")
     )
+
+
+def trips_from_obs(obs: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Observations -> the closed trips the reference persists: W4 distance,
+    W5 sessions, the trip fold, then the F3 min-length gate."""
+    sess = with_session_id(with_distance_home(obs, cfg), cfg)
+    return filter_min_trip_length(trips(sess, cfg), cfg)

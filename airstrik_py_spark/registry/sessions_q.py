@@ -69,8 +69,7 @@ def q_join_asof_closest(spark: SparkSession, sf_dir: str) -> DataFrame:
     history entry with ts <= closest_time per attribute (the reference's
     reversed scan with no break, airstrik.py:505-508, lets the oldest match
     win)."""
-    t = S.trips_with_asof(_sessioned(spark, sf_dir), CFG)
-    return t.select(
+    return _trips(spark, sf_dir).select(
         F.col("flight_id").alias("hex"),
         "session_id",
         F.round("closest_sec", 6).alias("closest_sec"),
@@ -100,8 +99,7 @@ def q_agg_trip_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — the flagship trip pipeline (airstrik.py:473-627): sessionize ->
     min-length gate -> argmin closest -> as-of state -> icao enrichment ->
     geofence re-match (airstrik.py:524-535) -> assembled trip rows."""
-    t = S.trips_with_asof(_sessioned(spark, sf_dir), CFG)
-    t = S.filter_min_trip_length(t, CFG)
+    t = S.filter_min_trip_length(_trips(spark, sf_dir), CFG)
     t = S.enrich_icao(t, spark, sf_dir, name_col="asof_flight")
     return t.select(
         "flight_id",

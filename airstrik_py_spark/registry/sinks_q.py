@@ -49,10 +49,7 @@ def _fmt_sec_duck(expr: str) -> str:
 
 def _assembled(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_session(spark)
-    obs = observations(spark, sf_dir)
-    sess = S.with_session_id(K.with_distance_home(obs, CFG), CFG)
-    t = S.trips_with_asof(sess, CFG)
-    t = S.filter_min_trip_length(t, CFG)
+    t = S.trips_from_obs(observations(spark, sf_dir), CFG)
     return S.enrich_icao(t, spark, sf_dir, name_col="asof_flight")
 
 
@@ -171,9 +168,7 @@ def q_sink_csv_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from airstrik_py_spark.operators import stats as ST
 
     pin_session(spark)
-    obs = observations(spark, sf_dir)
-    sess = S.with_session_id(K.with_distance_home(obs, CFG), CFG)
-    trips = S.filter_min_trip_length(S.trips(sess, CFG), CFG)
+    trips = S.trips_from_obs(observations(spark, sf_dir), CFG)
     return ST.daily_stats(trips, CFG).select(
         F.col("day").alias("date"),
         "unique_planes",

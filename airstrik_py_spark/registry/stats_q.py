@@ -26,9 +26,7 @@ _DAY_SQL = (
 
 def _trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_session(spark)
-    obs = observations(spark, sf_dir)
-    sess = S.with_session_id(K.with_distance_home(obs, CFG), CFG)
-    return S.filter_min_trip_length(S.trips(sess, CFG), CFG)
+    return S.trips_from_obs(observations(spark, sf_dir), CFG)
 
 
 def q_agg_daily_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

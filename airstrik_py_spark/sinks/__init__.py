@@ -25,7 +25,7 @@ def trip_documents(assembled: DataFrame, cfg) -> DataFrame:
     `struct<value, ts>` pairs, `extras struct<start_time, end_time>`,
     `filters map<string, struct<dist, alt>>`, `flight_id`.
 
-    Input: trips_with_asof output (+ trip_name).  Parquet stores this
+    Input: sessions.trips output (+ trip_name).  Parquet stores this
     losslessly."""
     pair = lambda v, t: F.when(  # noqa: E731
         v.isNotNull(), F.struct(v.alias("value"), t.alias("ts"))

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from airstrik_py_spark.config import EngineConfig
 from airstrik_py_spark.operators import kinematics as K
+from airstrik_py_spark.operators.sessions import trip_aggs
 
 
 @contextmanager
@@ -42,9 +43,10 @@ def session_conf(spark, key: str, value: str) -> Iterator[None]:
 
 
 def stream_trips(obs: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """W5 in pure streaming form: session_window(gap=remember) + the A2/A3/A4
-    trip fold as streaming-safe aggregates.  Emission happens when the
-    watermark passes session end + gap — the reference's close condition.
+    """W5 in pure streaming form: session_window(gap=remember) + the batch
+    trip fold's aggregates (sessions.trip_aggs), all streaming-safe.
+    Emission happens when the watermark passes session end + gap — the
+    reference's close condition.
 
     Boundary semantics: the reference closes a session only when the gap is
     STRICTLY greater than `remember` (airstrik.py:482), but session_window's
@@ -61,46 +63,15 @@ def stream_trips(obs: DataFrame, cfg: EngineConfig) -> DataFrame:
     lives in streaming/stateful.py::tracked_stream."""
     gap = f"{int(cfg.remember_s * 1_000_000) + 1} microseconds"
     watermark = f"{int(cfg.remember_s * 2)} seconds"
-    clean_flight = F.regexp_replace("flight", " ", "")
-    closest = F.min(
-        F.struct(
-            F.col("distance").alias("d"),
-            F.col("ts_sec").alias("t"),
-            F.col("event_id").alias("e"),
-        )
-    )
-    first_callsign = F.min(
-        F.when(
-            F.col("flight").isNotNull(),
-            F.struct(
-                F.col("ts_sec").alias("t"),
-                F.col("event_id").alias("e"),
-                clean_flight.alias("v"),
-            ),
-        )
+    alarmed = (F.col("distance") < F.lit(cfg.most_generous_dist_km)) & (
+        F.col("alt_geom").isNull()
+        | (F.col("alt_geom") <= F.lit(cfg.most_generous_alt_m))
     )
     return (
         K.with_distance_home(obs, cfg)
         .withWatermark("ts", watermark)
         .groupBy(F.col("hex"), F.session_window("ts", gap))
-        .agg(
-            F.min("ts_sec").alias("start_sec"),
-            F.max("ts_sec").alias("end_sec"),
-            F.count("*").alias("n_obs"),
-            first_callsign.getField("v").alias("callsign"),
-            closest.getField("d").alias("closest_dist"),
-            closest.getField("t").alias("closest_sec"),
-            F.max(
-                F.when(
-                    (F.col("distance") < F.lit(cfg.most_generous_dist_km))
-                    & (
-                        F.col("alt_geom").isNull()
-                        | (F.col("alt_geom") <= F.lit(cfg.most_generous_alt_m))
-                    ),
-                    True,
-                ).otherwise(False)
-            ).alias("alarmed"),
-        )
+        .agg(*trip_aggs(alarmed))
         .select(
             F.col("hex").alias("flight_id"),
             "start_sec",

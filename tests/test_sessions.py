@@ -88,7 +88,7 @@ def test_asof_state_at_closest(spark):
         ("a", BASE + 10, None, 35.727, -78.696, 0.0, 600.0, 1),  # closest here
         ("a", BASE + 20, "LATE", 36.0, -78.696, 0.0, 400.0, 1),
     ]
-    t = S.trips_with_asof(_sessioned(spark, rows), CFG).first()
+    t = S.trips(_sessioned(spark, rows), CFG).first()
     assert t["asof_alt"] == 800.0  # OLDEST entry at/before closest wins
     assert t["asof_alt_sec"] == BASE + 0
     assert t["asof_flight"] == "EARLY"  # oldest non-null at/before closest
@@ -103,7 +103,7 @@ def test_asof_excludes_entries_after_closest(spark):
         ("a", BASE + 10, None, 35.727, -78.696, 0.0, None, 1),  # closest here
         ("a", BASE + 20, "LATE", 36.0, -78.696, 0.0, 400.0, 1),
     ]
-    t = S.trips_with_asof(_sessioned(spark, rows), CFG).first()
+    t = S.trips(_sessioned(spark, rows), CFG).first()
     assert t["asof_alt"] is None
     assert t["asof_flight"] is None
     # distance exists from the first fix -> as-of distance is the FIRST one
@@ -151,3 +151,27 @@ def test_alarmed_strict_distance_and_alt_gate(spark):
     ]
     t2 = S.trips(_sessioned(spark, unk), CFG).first()
     assert t2["alarmed"] is True
+
+
+def test_fold_columns_prune_the_asof_state(spark):
+    """Callers that read only the fold columns of S.trips pay nothing for
+    the as-of state: Catalyst prunes the _asof_* aggregates and the
+    session-wide closest-approach window (the only window framed
+    unboundedpreceding..unboundedfollowing)."""
+    rows = [
+        ("a", BASE + 0, "X", 35.9, -78.696, 0.0, 800.0, 1),
+        ("a", BASE + 10, None, 35.727, -78.696, 0.0, 600.0, 1),
+    ]
+    full = S.trips(_sessioned(spark, rows), CFG)
+    plain = full.select(
+        "flight_id", "session_id", "start_sec", "end_sec", "n_obs",
+        "callsign", "closest_dist", "closest_sec", "alarmed",
+    )
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "_asof_" in optimized(full)
+    assert "unboundedfollowing" in optimized(full)
+    assert "_asof_" not in optimized(plain)
+    assert "unboundedfollowing" not in optimized(plain)

@@ -353,7 +353,7 @@ def test_trip_documents_nested_schema(spark, tmp_path):
     cfg = EngineConfig(remember_s=1000.0, min_trip_length_s=0.0)
     obs = _obs(spark)
     sess = S.with_session_id(K.with_distance_home(obs, cfg), cfg)
-    assembled = S.trips_with_asof(sess, cfg).withColumn(
+    assembled = S.trips(sess, cfg).withColumn(
         "trip_name", F.col("callsign")
     )
     docs = trip_documents(assembled, cfg)
@@ -433,7 +433,7 @@ def test_legacy_commentary_passthrough(spark, tmp_path):
     # trip_documents carries it top-level (where dbread reads it)
     from airstrik_py_spark.sinks import trip_documents
 
-    assembled = S.trips_with_asof(sess, CFG).withColumn(
+    assembled = S.trips(sess, CFG).withColumn(
         "trip_name", F.col("callsign")
     )
     assert "commentary" in assembled.columns

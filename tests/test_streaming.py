@@ -195,9 +195,9 @@ def _drain_trips(
 
 
 def _batch_trips(spark, tape: str) -> list:
-    from airstrik_py_spark.__main__ import _trips
-
-    batch = _trips(read_snapshot_batch(spark, tape), CFG).filter("flight_id <> 'zz'")
+    batch = S.trips_from_obs(read_snapshot_batch(spark, tape), CFG).filter(
+        "flight_id <> 'zz'"
+    )
     return sorted(tuple(r) for r in batch.select(*_TRIP_COLS).collect())
 
 
